@@ -182,6 +182,12 @@ def percentile(values: list[float], p: float) -> float:
     return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
 
 
+def tamper(rows: list) -> list:
+    """Every result the checks see passes through here unchanged; the
+    smoke test replaces it to prove that a wrong result counts as failed."""
+    return rows
+
+
 def median(values: list[float]) -> float:
     return statistics.median(values)
 

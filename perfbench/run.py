@@ -1,7 +1,7 @@
 """Wall-clock benchmark of the engine.
 
-    python3 perfbench/run.py --workload batch  --seed 1 --seconds 12 --trace 0
-    python3 perfbench/run.py --workload stream --seed 1 --seconds 12 --trace 1
+    python3 perfbench/run.py --workload batch  --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload stream --seed 1 --seconds 10 --trace 1
 
 Runs one workload (see ``batch.py`` and ``stream.py``) in one process
 on ``local[<cores>]``, checks its outputs, and prints a detail record
@@ -45,7 +45,9 @@ END_TO_END = {
 # trace.FUNCTION_MODULES / OPERATOR_MODULES and keeps the others in the
 # detail record, as it does spark.spill_mb, stream.source_ms and
 # stream.late_share: reported, they would print 0 on every run.
-REPORTED_FUNCTIONS = ("graph",)
+REPORTED_FUNCTIONS = (
+    "dedup", "similarity", "graph", "text", "approx", "timeseries", "analytics", "multimodal",
+)
 REPORTED_OPERATORS = ("windows", "joins")
 
 
@@ -178,13 +180,13 @@ def _overhead(workload: str, e2e: dict, sf: float, seconds: float) -> dict | str
 
 
 def run_workload(workload: str, seed: int, seconds: float, traced: bool,
-                 run: harness.RunDir, sf: float = SF, corrupt: bool = False) -> tuple[dict, dict]:
+                 run: harness.RunDir) -> tuple[dict, dict]:
     """Run one workload; returns (result line, detail record)."""
     from perfbench import trace
 
     harness.configure_env(run)
     steal0 = harness.steal_seconds()
-    data_dir = datagen.ensure_tables(os.path.join(harness.WORK, "data"), sf)
+    data_dir = datagen.ensure_tables(os.path.join(harness.WORK, "data"), SF)
     tracer = trace.Tracer() if traced else trace.NullTracer()
     if traced:
         tracer.install()
@@ -199,11 +201,11 @@ def run_workload(workload: str, seed: int, seconds: float, traced: bool,
             if workload == "batch":
                 from perfbench import batch
 
-                res = batch.measure(spark, data_dir, seed, seconds, tracer, corrupt=corrupt)
+                res = batch.measure(spark, data_dir, seed, seconds, tracer)
             else:
                 from perfbench import stream
 
-                res = stream.measure(spark, run, seed, seconds, corrupt=corrupt)
+                res = stream.measure(spark, run, seed, seconds)
                 setup["query_start_s"] = res["phases"]["saturated"].start_call_s
                 setup["setup_s"] += setup["query_start_s"]
             if traced:
@@ -212,7 +214,7 @@ def run_workload(workload: str, seed: int, seconds: float, traced: bool,
             _stop_jvm()
     e2e = {"setup_s": setup["setup_s"], "peak_pss_mb": mem.peak_mb, **res["metrics"]}
     detail = {
-        "workload": workload, "seed": seed, "seconds": seconds, "traced": traced, "sf": sf,
+        "workload": workload, "seed": seed, "seconds": seconds, "traced": traced, "sf": SF,
         "environment": harness.environment_record(steal0),
         "setup": setup, "end_to_end": e2e, "workload_detail": res["detail"],
     }
@@ -239,7 +241,7 @@ def run_workload(workload: str, seed: int, seconds: float, traced: bool,
         detail["not_exercised"] = [n for n in units if not layers.get(n)]
         detail["unreported_layers"] = {k: v for k, v in layers.items() if k not in units}
         metrics = {n: {"value": float(layers.get(n, 0.0)), "unit": u} for n, u in units.items()}
-        detail["trace_overhead"] = _overhead(workload, e2e, sf, seconds)
+        detail["trace_overhead"] = _overhead(workload, e2e, SF, seconds)
     else:
         metrics = {m: {"value": float(e2e[m]), "unit": END_TO_END[m]} for m in END_TO_END if m in e2e}
     _save(_last_path(workload, traced), detail)
@@ -253,9 +255,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=SF, help="table scale factor (smoke runs use 0.001)")
-    ap.add_argument("--corrupt", action="store_true",
-                    help="smoke test only: tamper with one result, which the checks must catch")
     args = ap.parse_args(argv)
     if not harness.engine_present():
         print("perfbench: the engine (flink_essentials_spark/, tools/check_correctness.py) "
@@ -264,7 +263,7 @@ def main(argv: list[str] | None = None) -> int:
     run = harness.RunDir()
     try:
         result, detail = run_workload(args.workload, args.seed, args.seconds,
-                                      bool(args.trace), run, sf=args.sf, corrupt=args.corrupt)
+                                      bool(args.trace), run)
     finally:
         run.close()
     print(json.dumps({"detail": detail}, default=str), file=sys.stderr, flush=True)

@@ -5,10 +5,11 @@
 
 Each workload runs once untraced at sf0.001 with a short measurement
 (every end-to-end metric must print with its unit and the checks must
-pass) and once traced with one result deliberately corrupted (every
-per-layer metric must print with its unit and the corrupted result
-must count as failed). A copy of the benchmark without the engine must
-fail fast without printing a result.
+pass) and once traced with ``harness.tamper`` replaced so that every
+result the checks see carries a duplicated row (every per-layer metric
+must print with its unit and the tampered results must count as
+failed). A copy of the benchmark without the engine must fail fast
+without printing a result.
 """
 
 from __future__ import annotations
@@ -30,13 +31,28 @@ def _spec() -> dict:
         return json.load(f)
 
 
-def _run(workload: str, *extra: str, cwd: str = ROOT) -> tuple[int, dict | None, str]:
-    cmd = [sys.executable, os.path.join(cwd, "perfbench", "run.py"), "--workload", workload,
-           "--seed", "7", "--seconds", "2", "--sf", "0.001", *extra]
+# A benchmark process at minimal table size, optionally with every
+# checked result tampered with.
+CHILD = """
+import sys
+from perfbench import harness, run
+run.SF = 0.001
+if sys.argv[1] == "tamper":
+    harness.tamper = lambda rows: rows[:1] * 2 + rows[1:]
+raise SystemExit(run.main(sys.argv[2:]))
+"""
+
+
+def _output(cmd: list[str], cwd: str) -> tuple[int, dict | None, str]:
     p = subprocess.run(cmd, cwd=cwd, capture_output=True, text=True, timeout=600)
     lines = p.stdout.strip().splitlines()
     result = json.loads(lines[-1]) if lines else None
     return p.returncode, result, p.stderr[-3000:]
+
+
+def _run(workload: str, trace: int, *, tamper: bool = False) -> tuple[int, dict | None, str]:
+    args = ["--workload", workload, "--seed", "7", "--seconds", "2", "--trace", str(trace)]
+    return _output([sys.executable, "-c", CHILD, "tamper" if tamper else "-", *args], ROOT)
 
 
 def _assert_metrics(result: dict, wanted: list[dict]) -> None:
@@ -65,16 +81,16 @@ def test_spec_matches_code():
 
 def test_untraced_runs_print_every_end_to_end_metric():
     for workload in WORKLOADS:
-        rc, result, err = _run(workload, "--trace", "0")
+        rc, result, err = _run(workload, 0)
         assert rc == 0 and result is not None, err
         _assert_metrics(result, _spec()["end_to_end"])
         assert result["correct"] and result["failed"] == 0, (result, err)
         assert all(v["value"] > 0 for v in result["metrics"].values()), result
 
 
-def test_corrupted_result_counts_as_failed_in_traced_run():
+def test_tampered_result_counts_as_failed_in_traced_run():
     for workload in WORKLOADS:
-        rc, result, err = _run(workload, "--trace", "1", "--corrupt")
+        rc, result, err = _run(workload, 1, tamper=True)
         assert rc == 0 and result is not None, err
         _assert_metrics(result, _spec()["per_layer"])
         assert result["failed"] >= 1 and not result["correct"], result
@@ -88,7 +104,9 @@ def test_fails_fast_without_the_engine():
         shutil.copy(SPEC_PATH, bare)
         shutil.copytree(HERE, os.path.join(bare, "perfbench"),
                         ignore=shutil.ignore_patterns("__pycache__"))
-        rc, result, _ = _run("batch", "--trace", "0", cwd=bare)
+        cmd = [sys.executable, "perfbench/run.py", "--workload", "batch", "--seed", "7",
+               "--seconds", "2", "--trace", "0"]
+        rc, result, _ = _output(cmd, bare)
         assert rc != 0 and result is None
     finally:
         shutil.rmtree(bare, ignore_errors=True)

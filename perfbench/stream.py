@@ -199,8 +199,7 @@ def check_windows(
 class Collector:
     """foreachBatch sink: collects each micro-batch and stamps receipt."""
 
-    def __init__(self, corrupt: bool = False) -> None:
-        self.corrupt = corrupt  # smoke test: tamper with the first row
+    def __init__(self) -> None:
         self.rows: list[tuple] = []  # (receipt_s, ws, k, n, srv, mv, due_ms)
         self.callback_ms: list[float] = []
         self.duplicates = 0
@@ -209,18 +208,15 @@ class Collector:
 
     def __call__(self, df, batch_id: int) -> None:
         t0 = time.time()
-        rows = df.collect()
+        rows = harness.tamper(df.collect())
         t_recv = time.time()
         with self._lock:
             for r in rows:
-                n = r.n
-                if self.corrupt:
-                    n, self.corrupt = n + 1, False
                 key = (r.ws, r.k)
                 if key in self._seen:
                     self.duplicates += 1
                 self._seen.add(key)
-                self.rows.append((t_recv, r.ws, r.k, n, r.srv, r.mv, r.due_ms))
+                self.rows.append((t_recv, r.ws, r.k, r.n, r.srv, r.mv, r.due_ms))
             self.callback_ms.append((time.time() - t0) * 1000)
 
     def windows(self) -> dict[tuple[int, int], tuple[int, int, int]]:
@@ -267,7 +263,7 @@ class Phase:
 
 
 def run_phase(spark, run: harness.RunDir, km: KeyMap, *, micro_batch: bool,
-              seconds: float, min_batches: int, name: str, corrupt: bool = False) -> Phase:
+              seconds: float, min_batches: int, name: str) -> Phase:
     """Start the pipeline, let ``SKIP_BATCHES[name]`` data batches pass
     (the cold first batch, the backlog it leaves, and JIT warm-up), then
     measure for ``seconds`` and at least ``min_batches`` batches."""
@@ -275,7 +271,7 @@ def run_phase(spark, run: harness.RunDir, km: KeyMap, *, micro_batch: bool,
     from flink_essentials_spark.sources import streaming
 
     rate = ROWS_PER_BATCH if micro_batch else RATE
-    collector = Collector(corrupt)
+    collector = Collector()
     t0 = time.time()
     query = sinks.for_each_batch(
         pipeline(streaming.rate_source(spark, rate, micro_batch=micro_batch), km),
@@ -314,17 +310,15 @@ def run_phase(spark, run: harness.RunDir, km: KeyMap, *, micro_batch: bool,
     return phase
 
 
-def measure(spark, run: harness.RunDir, seed: int, seconds: float,
-            corrupt: bool = False) -> dict:
-    """Run both phases; return end-to-end metrics, checks and detail.
-    ``corrupt`` tampers with one emitted row (smoke test only)."""
+def measure(spark, run: harness.RunDir, seed: int, seconds: float) -> dict:
+    """Run both phases; return end-to-end metrics, checks and detail."""
     km = KeyMap.from_seed(seed)
     # the closed loop runs first: its first micro-batch pays the cold
     # start (planning, codegen, state-store set-up) at a fixed size
     closed = run_phase(spark, run, km, micro_batch=True, seconds=0.0,
                        min_batches=SATURATED_BATCHES, name="saturated")
     open_loop = run_phase(spark, run, km, micro_batch=False, seconds=seconds,
-                          min_batches=MIN_BATCHES, name="open", corrupt=corrupt)
+                          min_batches=MIN_BATCHES, name="open")
 
     attempted = failed = 0
     checks = {}
