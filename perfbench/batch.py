@@ -1,8 +1,10 @@
 """The ``batch`` workload: closed-loop passes over graded queries.
 
 One client runs a fixed list of registry queries back to back, each
-materialised with a noop write; a pass is one run of every item, in an
-order the seed shuffles per pass. The list mixes two kinds of item:
+materialised with a noop write; a pass is one run of every item. The
+seed shuffles the items once, and every pass of the run, the cold one
+included, runs them in that order, so each item recurs exactly one pass
+after its previous run. The list mixes two kinds of item:
 
 - ``HEAD_ROWS``: rows of the graded set (the registry's first 50 rows),
   routed the way the engine decides; at this scale the twin-gated
@@ -68,6 +70,8 @@ class Item:
 
 
 ITEMS = tuple(Item(n, False) for n in HEAD_ROWS) + tuple(Item(n, True) for n in LADDERS)
+# latency_tail_ms averages the medians of the slowest third of the items
+TAIL_ITEMS = len(ITEMS) // 3
 
 
 @dataclass
@@ -123,19 +127,22 @@ def measure(spark, data_dir: str, seed: int, seconds: float, tracer) -> dict:
     names = sorted({it.name for it in ITEMS})
     want = oracle.oracle_digests(data_dir, names)
 
-    def order(pass_no: int) -> list[Item]:
-        items = list(ITEMS)
-        random.Random(f"{seed}:{pass_no}").shuffle(items)
-        return items
+    # Some items run much faster when they recur within a few seconds of
+    # their previous run (the ladder about 1.1 s against 1.6 s,
+    # ``as_of_join`` and ``pricing_summary`` by a quarter). One order for
+    # the whole run keeps every item's gap at one pass, so its samples do
+    # not depend on where the seed puts it from pass to pass.
+    order = list(ITEMS)
+    random.Random(seed).shuffle(order)
 
-    cold_s, cold = run_pass(spark, data_dir, order(0), collect=True, tracer=tracer,
+    cold_s, cold = run_pass(spark, data_dir, order, collect=True, tracer=tracer,
                             group="cold")
     mismatched = sorted(r.item.label for r in cold if r.error is None and r.digest != want[r.item.name])
     all_runs = list(cold)
 
     warm_s: list[float] = []
     for n in range(WARM_PASSES):
-        dt, runs = run_pass(spark, data_dir, order(n + 1), collect=False, tracer=tracer,
+        dt, runs = run_pass(spark, data_dir, order, collect=False, tracer=tracer,
                             group=f"warm{n}")
         warm_s.append(dt)
         all_runs += runs
@@ -148,8 +155,8 @@ def measure(spark, data_dir: str, seed: int, seconds: float, tracer) -> dict:
         group = f"pass{len(pass_s)}"
         tracer.pass_begin()
         steal0 = harness.steal_seconds()
-        dt, runs = run_pass(spark, data_dir, order(100 + len(pass_s)), collect=False,
-                            tracer=tracer, group=group)
+        dt, runs = run_pass(spark, data_dir, order, collect=False, tracer=tracer,
+                            group=group)
         steal_s.append(harness.steal_seconds() - steal0)
         tracer.pass_end(runs)
         pass_s.append(dt)
@@ -169,20 +176,25 @@ def measure(spark, data_dir: str, seed: int, seconds: float, tracer) -> dict:
         # pair of items decides the figure
         metrics["latency_p50_ms"] = 1000 * math.exp(
             sum(math.log(v) for v in item_medians.values()) / len(item_medians))
-        metrics["latency_tail_ms"] = max(item_medians.values()) * 1000
+        # the mean over the slowest third of the items: one item's median
+        # moves with that family's state in the run (the ladder read
+        # 1.4-1.5 s in some runs and 1.7-1.8 s in others of the same host)
+        slowest = sorted(item_medians.values(), reverse=True)[:TAIL_ITEMS]
+        metrics["latency_tail_ms"] = 1000 * sum(slowest) / len(slowest)
     return {
         "metrics": metrics,
         "attempted": len(all_runs),
         "failed": sum(1 for r in all_runs if r.error) + len(mismatched),
         "detail": {
             "items": [it.label for it in ITEMS],
+            "order": [it.label for it in order],
             "cold_query_s": {r.item.label: r.wall_s for r in cold},
             "warmup_pass_s": warm_s,
             "pass_s": pass_s,
             "pass_drift": harness.drift(pass_s),
             "pass_steal_s": steal_s,
             "query_s": per_item,
-            "slowest_query": max(item_medians, key=item_medians.get) if item_medians else None,
+            "tail_items": sorted(item_medians, key=item_medians.get, reverse=True)[:TAIL_ITEMS],
             "oracle_mismatch": mismatched,
             "errors": errors,
         },
