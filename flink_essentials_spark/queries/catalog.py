@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_essentials_spark.queries import dataflow, llmdata, relational
-from flink_essentials_spark.tables import load_tables, table_rows, ts_bounds_ms
+from flink_essentials_spark.tables import load_tables, ts_bounds_ms
 
 
 @dataclass(frozen=True)
@@ -42,21 +42,6 @@ def _replay_dir() -> str:
     return root
 
 
-def _stream_shuffle_parts(
-    spark: SparkSession, rows_per_batch: int, target: int = 1 << 16
-) -> str:
-    """Data-adaptive shuffle-partition count for a streaming replay
-    query (guide §2.5): the stateful-operator partition count is fixed
-    at first batch by this conf, and EVERY partition pays a state-store
-    load/commit per micro-batch, so oversizing it is a per-batch tax
-    (measured r15: streaming_join_rollup 7.0 s at 8 parts → 5.3 s at
-    2 at sf0.1) while undersizing it caps throughput at scale. Size
-    from the replayed volume — ~``target`` rows per partition per
-    batch, clamped to [2, defaultParallelism]."""
-    need = -(-int(rows_per_batch) // target)
-    return str(max(2, min(spark.sparkContext.defaultParallelism, need)))
-
-
 def q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 through the REAL streaming path: documents replayed as a
     file stream (maxFilesPerTrigger=1) → tokenize → groupBy count →
@@ -75,15 +60,7 @@ def q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = file_replay(spark, replay_dir, "text string", files_per_trigger=1)
     counted = word_count(stream, "text")
     name = "wc_" + uuid.uuid4().hex[:8]
-    # the word vocabulary is tiny — 32 state-store partitions would be
-    # pure per-micro-batch overhead; the streaming agg state partition
-    # count is fixed at first run by this conf
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        return run_to_memory(spark, counted, name, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, counted, name, output_mode="complete")
 
 
 def q_streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,12 +90,7 @@ def q_streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(ms(F.col("window.start")).alias("window_start_ms"), "cnt", "sum_value")
     )
     name = "sw_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, win, name, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, win, name, output_mode="complete")
 
 
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,12 +113,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.encode(normalize_text(F.col("text")), "utf-8")).alias("text_md5")
     ).dropDuplicates(["text_md5"])
     name = "sd_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, deduped, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, deduped, name)
 
 
 Q_STREAMING_DEDUP_SQL = r"""
@@ -207,12 +174,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ms("purchase_ts").alias("purchase_ts_ms"),
     )
     name = "sij_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, out, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, out, name)
 
 
 def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,18 +316,9 @@ def _streaming_interval_join_sink(
         ms("signup_ts").alias("signup_ts_ms"),
     )
     name = "soj_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # ~half the events per data batch (2 range buckets)
-        _stream_shuffle_parts(spark, table_rows(sf_dir, "events") // 2),
+    return run_to_memory(spark, out, name, output_mode="append").filter(
+        F.col("user_id") >= 0
     )
-    try:
-        return run_to_memory(spark, out, name, output_mode="append").filter(
-            F.col("user_id") >= 0
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 Q_STREAMING_OUTER_JOIN_SQL = """
@@ -520,14 +473,8 @@ def q_streaming_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "sjr_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nd = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # ~half the events per data batch (2 range buckets)
-        _stream_shuffle_parts(spark, table_rows(sf_dir, "events") // 2),
     )
     # no timers in this pipeline: join eviction and window emission
     # both happen on watermark enforcement during DATA batches (the
@@ -541,7 +488,6 @@ def q_streaming_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id") >= 0
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
         )
@@ -588,12 +534,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "c_mktsegment", "c_name", "value"
     )
     name = "se_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, enriched, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, enriched, name)
 
 
 Q_STREAMING_ENRICH_SQL = """
@@ -635,12 +576,7 @@ def q_streaming_dedup_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["text_md5"])
     )
     name = "sds_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, stream, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, stream, name)
 
 
 Q_STREAMING_DEDUP_STATIC_SQL = r"""
@@ -682,12 +618,7 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("text_md5")
     )
     name = "swd_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, stream, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, stream, name)
 
 
 
@@ -799,17 +730,9 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "ssw_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # 4 state partitions (was 8): session state at this scale is tiny
-    # and per-partition state-store commit overhead dominates each of
-    # the five micro-batches (matches streaming_wordcount's cap)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        return run_to_memory(spark, win, name, output_mode="append").filter(
-            F.col("user_id") >= 0
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, win, name, output_mode="append").filter(
+        F.col("user_id") >= 0
+    )
 
 
 def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -939,11 +862,9 @@ def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
     )
     name = "scs_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nd = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     # every timer this design needs fires during a DATA batch (the
     # second sentinel exists precisely to be that batch), so the
     # engine's extra timer-service batches after each watermark
@@ -955,7 +876,6 @@ def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("key") >= 0
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
         )
@@ -1007,12 +927,7 @@ def q_streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", stream["user_id"], "ts_ms", "price"
     )
     name = "scd2e_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, enriched, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, enriched, name)
 
 
 _SST_REPLAY: dict[tuple, str] = {}
@@ -1069,12 +984,7 @@ def q_streaming_state_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
     )
     name = "sst_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(spark, out, name, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return run_to_memory(spark, out, name, output_mode="append")
 
 
 Q_STREAMING_STATE_THROUGHPUT_SQL = """

@@ -7,20 +7,102 @@
   sink manifest + checkpoint (the guarantee BuiltIn.scala:69-71 asks for)
 - print (K5) → console sink; executeAndCollect (K6) → memory sink
 - addSink(fn) (K4) → foreachBatch
+
+Every streaming query starts here, with its state partitions sized to
+its per-batch volume: a stateful operator's partition count is fixed at
+the first batch, and each partition pays a state-store load and commit
+per micro-batch whatever it holds. The rows one micro-batch reads,
+summed over the plan's streaming scans, come from ``rate``
+(``rowsPerSecond``, one second's rows), ``rate-micro-batch``
+(``rowsPerBatch``) or parquet file replay (``maxFilesPerTrigger`` x the
+largest footer row count); the query then starts with ~64k rows per
+partition, clamped to [1, ``spark.sql.shuffle.partitions``]. Other
+sources (CSV/JSON files, sockets, Kafka) keep the session's count, and a
+restarted checkpoint keeps its own (Spark restores it from the offset
+log). Cap the count on the session, not around a sink call.
 """
 
 from __future__ import annotations
 
+import os
 import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_ROWS_PER_PARTITION = 1 << 16
+_MAX_FOOTERS = 64  # the oldest files: the file source replays in mtime order
+
+
+def _file_replay_rows(source) -> int | None:
+    """Rows per micro-batch of a parquet file-stream scan, from footers."""
+    import pyarrow.parquet as pq
+
+    opts = {}
+    it = source.options().iterator()
+    while it.hasNext():
+        kv = it.next()
+        opts[kv._1().lower()] = kv._2()
+    path = opts.get("path")
+    if "parquet" not in source.className().lower() or not path or not os.path.isdir(path):
+        return None
+    with os.scandir(path) as entries:
+        files = sorted(
+            (e for e in entries if e.is_file() and not e.name.startswith(("_", "."))),
+            key=lambda e: e.stat().st_mtime,
+        )
+    if not files:
+        return None
+    try:
+        per_file = max(pq.ParquetFile(e.path).metadata.num_rows for e in files[:_MAX_FOOTERS])
+    except (OSError, ValueError):  # a file still being written
+        return None
+    return per_file * min(int(opts.get("maxfilespertrigger", len(files))), len(files))
+
+
+def _batch_rows(sdf: DataFrame) -> int | None:
+    """Rows one micro-batch of ``sdf`` reads, summed over its streaming
+    scans; None when any scan's volume is unknown."""
+    total = 0
+    leaves = sdf._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        kind = leaf.getClass().getSimpleName()
+        rows = None
+        if kind == "StreamingRelationV2":
+            opts = leaf.extraOptions()  # case-insensitive
+            if leaf.sourceName() == "rate":
+                rows = int(opts.getOrDefault("rowsPerSecond", "1"))
+            elif leaf.sourceName() == "rate-micro-batch" and opts.containsKey("rowsPerBatch"):
+                rows = int(opts.get("rowsPerBatch"))
+        elif kind == "StreamingRelation":
+            rows = _file_replay_rows(leaf.dataSource())
+        if rows is None:
+            return None
+        total += rows
+    return total
+
+
+def _start(writer, sdf: DataFrame):
+    """``writer.start()`` with ``sdf``'s state partitions sized (module
+    docstring); ``start()`` snapshots the conf into the query's session."""
+    rows = _batch_rows(sdf)
+    if rows is None:
+        return writer.start()
+    conf = sdf.sparkSession.conf
+    prev = conf.get(_SHUFFLE_PARTITIONS)
+    conf.set(_SHUFFLE_PARTITIONS, str(max(1, min(int(prev), -(-rows // _ROWS_PER_PARTITION)))))
+    try:
+        return writer.start()
+    finally:
+        conf.set(_SHUFFLE_PARTITIONS, prev)
+
 
 def to_console(sdf: DataFrame, *, output_mode: str = "append", **options):
-    return (
-        sdf.writeStream.outputMode(output_mode).format("console").options(**options).start()
-    )
+    return _start(sdf.writeStream.outputMode(output_mode).format("console").options(**options), sdf)
 
 
 def to_memory(
@@ -34,7 +116,7 @@ def to_memory(
     w = sdf.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _start(w, sdf)
 
 
 def run_to_memory(
@@ -43,11 +125,13 @@ def run_to_memory(
     """Drive a streaming frame to completion synchronously (bounded
     sources / file replay) and return the materialized result table.
 
-    The checkpoint (offsets/commit logs + state-store deltas, fsynced
-    every micro-batch) goes on fast scratch storage and is removed as
-    soon as the query stops — a bounded replay never resumes, so the
-    checkpoint's only job is to exist while the query runs (guide §6;
-    FES_SCRATCH_DIR overrides the root)."""
+    State partitions are sized from the replay's per-batch volume
+    (module docstring). The checkpoint (offsets/commit logs +
+    state-store deltas, fsynced every micro-batch) goes on fast scratch
+    storage and is removed as soon as the query stops — a bounded
+    replay never resumes, so the checkpoint's only job is to exist
+    while the query runs (guide §6; FES_SCRATCH_DIR overrides the
+    root)."""
     import shutil
 
     from flink_essentials_spark.scratch import scratch_dir
@@ -73,22 +157,24 @@ def to_files(
 ):
     """Fault-tolerant rolling file sink (K3)."""
     ckpt = checkpoint or tempfile.mkdtemp(prefix="fes_ckpt_")
-    return (
+    return _start(
         sdf.writeStream.outputMode(output_mode)
         .format(fmt)
         .option("path", path)
         .option("checkpointLocation", ckpt)
-        .options(**options)
-        .start()
+        .options(**options),
+        sdf,
     )
 
 
 def for_each_batch(sdf: DataFrame, fn: Callable[[DataFrame, int], None], *, checkpoint: str | None = None):
-    """addSink(fn) analog (K4) with exactly-once batch ids."""
+    """addSink(fn) analog (K4) with exactly-once batch ids. State
+    partitions are sized from the sources' per-batch volume (module
+    docstring); ``fn``'s batch frames run with the same count."""
     writer = sdf.writeStream.foreachBatch(fn)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(writer, sdf)
 
 
 def write_text(df: DataFrame, path: str, *, single_file: bool = False, mode: str = "overwrite"):

@@ -29,3 +29,14 @@ from flink_essentials_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark("fes-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def recorder(spark):
+    """A metrics.ProgressRecorder listening to the session for one test."""
+    from flink_essentials_spark.metrics import ProgressRecorder
+
+    rec = ProgressRecorder()
+    spark.streams.addListener(rec)
+    yield rec
+    spark.streams.removeListener(rec)

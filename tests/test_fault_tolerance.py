@@ -184,6 +184,27 @@ def test_foreach_batch_sink(spark, tmp_path):
     assert sum(n for _, n in seen) == 10
 
 
+def test_restart_keeps_checkpoint_state_partitions(spark, recorder, tmp_path):
+    """A checkpoint created at 4 state partitions restarts at 4 through
+    for_each_batch, although the sink would size this source to 1: the
+    count is restored from the offset log, so state stays readable."""
+    from test_sink_sizing import distinct_keys, drain, start_unsized, state_partitions, wait_batches
+
+    from flink_essentials_spark.sources.streaming import rate_source
+
+    ckpt = str(tmp_path / "ckpt")
+    sdf = distinct_keys(rate_source(spark, 10, micro_batch=True))
+
+    def parts_of(q) -> set[int]:
+        try:
+            return state_partitions(wait_batches(recorder, q.runId, 2))
+        finally:
+            q.stop()
+
+    assert parts_of(start_unsized(spark, sdf, drain, ckpt, 4)) == {4}
+    assert parts_of(for_each_batch(sdf, drain, checkpoint=ckpt)) == {4}
+
+
 def test_salted_sum_equals_direct(spark):
     """Skew-proof two-phase agg produces identical results to the
     direct groupBy (Partitions.scala skew lesson, aggregation form)."""
