@@ -8,18 +8,34 @@
 - print (K5) → console sink; executeAndCollect (K6) → memory sink
 - addSink(fn) (K4) → foreachBatch
 
-Every streaming query starts here, with its state partitions sized to
-its per-batch volume: a stateful operator's partition count is fixed at
-the first batch, and each partition pays a state-store load and commit
-per micro-batch whatever it holds. The rows one micro-batch reads,
-summed over the plan's streaming scans, come from ``rate``
-(``rowsPerSecond``, one second's rows), ``rate-micro-batch``
-(``rowsPerBatch``) or parquet file replay (``maxFilesPerTrigger`` x the
-largest footer row count); the query then starts with ~64k rows per
-partition, clamped to [1, ``spark.sql.shuffle.partitions``]. Other
-sources (CSV/JSON files, sockets, Kafka) keep the session's count, and a
-restarted checkpoint keeps its own (Spark restores it from the offset
-log). Cap the count on the session, not around a sink call.
+Every streaming query starts here, which sets two things for it alone
+(``start()`` snapshots the session's conf into the query):
+
+- State partitions sized to its per-batch volume: a stateful
+  operator's partition count is fixed at the first batch, and each
+  partition pays a state-store load and commit per micro-batch whatever
+  it holds. The rows one micro-batch reads, summed over the plan's
+  streaming scans, come from ``rate`` (``rowsPerSecond``, one second's
+  rows), ``rate-micro-batch`` (``rowsPerBatch``) or parquet file replay
+  (``maxFilesPerTrigger`` x the largest footer row count); the query
+  then starts with ~64k rows per partition, clamped to [1,
+  ``spark.sql.shuffle.partitions``]. Other sources (CSV/JSON files,
+  sockets, Kafka) keep the session's count, and a restarted checkpoint
+  keeps its own (Spark restores it from the offset log). Cap the count
+  on the session, not around a sink call.
+- Spark's ``FileSystem`` checkpoint manager when every file the query's
+  manager writes is local: the checkpoint root (the sink's option, else
+  ``spark.sql.streaming.checkpointLocation``, else Spark's temp dir) and,
+  for ``to_files``, the output path with its ``_spark_metadata`` log. A
+  path is local when its scheme, or ``fs.defaultFS``'s for a path
+  without one, is ``file``. Spark's default ``FileContext`` manager
+  forks a shell (``readlink`` twice per rename, ``chmod`` per create) on a
+  host without Hadoop's native library, ~100 forks per micro-batch of
+  offsets, commits and state deltas; both managers refuse to rename a
+  temp file over an existing one and keep the ``.crc`` files, and the
+  files they write are the same, so a checkpoint restarts under either.
+  Other schemes (HDFS, S3) keep the default, whose atomic rename
+  matters there; a manager set on the session is kept.
 """
 
 from __future__ import annotations
@@ -27,11 +43,16 @@ from __future__ import annotations
 import os
 import tempfile
 from typing import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_essentials_spark.sources.streaming import stream_partitions
+
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-_ROWS_PER_PARTITION = 1 << 16
+_SESSION_CHECKPOINT = "spark.sql.streaming.checkpointLocation"
+_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 _MAX_FOOTERS = 64  # the oldest files: the file source replays in mtime order
 
 
@@ -86,23 +107,53 @@ def _batch_rows(sdf: DataFrame) -> int | None:
     return total
 
 
-def _start(writer, sdf: DataFrame):
-    """``writer.start()`` with ``sdf``'s state partitions sized (module
-    docstring); ``start()`` snapshots the conf into the query's session."""
+def _checkpoint_manager(paths, default_fs: str) -> str | None:
+    """Spark's FileSystem checkpoint manager when every path is on the
+    local filesystem (a path without a scheme resolves against
+    ``default_fs``); None keeps Spark's default."""
+    default = urlparse(default_fs).scheme
+    local = all((urlparse(p).scheme or default) == "file" for p in paths)
+    return _FS_MANAGER if local else None
+
+
+def _start(writer, sdf: DataFrame, checkpoint: str | None = None, output: str | None = None):
+    """``writer.start()`` with ``sdf``'s state partitions and checkpoint
+    manager chosen (module docstring) for this query only."""
+    spark = sdf.sparkSession
+    conf = spark.conf
+    chosen = {}
     rows = _batch_rows(sdf)
-    if rows is None:
-        return writer.start()
-    conf = sdf.sparkSession.conf
-    prev = conf.get(_SHUFFLE_PARTITIONS)
-    conf.set(_SHUFFLE_PARTITIONS, str(max(1, min(int(prev), -(-rows // _ROWS_PER_PARTITION)))))
+    if rows is not None:
+        chosen[_SHUFFLE_PARTITIONS] = str(stream_partitions(rows, int(conf.get(_SHUFFLE_PARTITIONS))))
+    if conf.get(_FILE_MANAGER, None) is None:
+        # no root: Spark's temp dir, qualified against fs.defaultFS like
+        # any path without a scheme
+        paths = [checkpoint or conf.get(_SESSION_CHECKPOINT, None) or ""]
+        if output:
+            paths.append(output)
+        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+        manager = _checkpoint_manager(paths, default_fs)
+        if manager:
+            chosen[_FILE_MANAGER] = manager
+    prev = {key: conf.get(key, None) for key in chosen}
+    for key, value in chosen.items():
+        conf.set(key, value)
     try:
         return writer.start()
     finally:
-        conf.set(_SHUFFLE_PARTITIONS, prev)
+        for key, value in prev.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)
 
 
 def to_console(sdf: DataFrame, *, output_mode: str = "append", **options):
-    return _start(sdf.writeStream.outputMode(output_mode).format("console").options(**options), sdf)
+    return _start(
+        sdf.writeStream.outputMode(output_mode).format("console").options(**options),
+        sdf,
+        options.get("checkpointLocation"),
+    )
 
 
 def to_memory(
@@ -116,7 +167,7 @@ def to_memory(
     w = sdf.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    return _start(w, sdf)
+    return _start(w, sdf, checkpoint)
 
 
 def run_to_memory(
@@ -164,17 +215,20 @@ def to_files(
         .option("checkpointLocation", ckpt)
         .options(**options),
         sdf,
+        ckpt,
+        path,
     )
 
 
 def for_each_batch(sdf: DataFrame, fn: Callable[[DataFrame, int], None], *, checkpoint: str | None = None):
     """addSink(fn) analog (K4) with exactly-once batch ids. State
-    partitions are sized from the sources' per-batch volume (module
-    docstring); ``fn``'s batch frames run with the same count."""
+    partitions are sized from the sources' per-batch volume and a local
+    checkpoint runs on the FileSystem manager (module docstring);
+    ``fn``'s batch frames run with the same count."""
     writer = sdf.writeStream.foreachBatch(fn)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    return _start(writer, sdf)
+    return _start(writer, sdf, checkpoint)
 
 
 def write_text(df: DataFrame, path: str, *, single_file: bool = False, mode: str = "overwrite"):

@@ -17,6 +17,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CART_USERS = ("Bob", "Alice", "Sam", "Tom", "Rob")  # reference :159
+ROWS_PER_PARTITION = 1 << 16
+
+
+def stream_partitions(rows: int, cap: int) -> int:
+    """Partitions for ``rows`` per micro-batch: ~64k rows each, clamped
+    to [1, ``cap``]. Every partition costs a task (and, in a stateful
+    operator, a state-store load and commit) per batch whatever it
+    holds."""
+    return max(1, min(cap, -(-rows // ROWS_PER_PARTITION)))
 
 
 def socket_lines(spark: SparkSession, host: str, port: int) -> DataFrame:
@@ -32,10 +41,19 @@ def socket_lines(spark: SparkSession, host: str, port: int) -> DataFrame:
 def rate_source(
     spark: SparkSession, rows_per_second: int = 10, *, micro_batch: bool = False
 ) -> DataFrame:
-    """Monotonic (timestamp, value) counter stream."""
+    """Monotonic (timestamp, value) counter stream, read in
+    ``stream_partitions`` of one batch's rows (one second's for
+    ``rate``) up to the default parallelism; the source's own default
+    is one partition per core whatever the rate."""
     fmt = "rate-micro-batch" if micro_batch else "rate"
     opt = "rowsPerBatch" if micro_batch else "rowsPerSecond"
-    return spark.readStream.format(fmt).option(opt, rows_per_second).load()
+    parts = stream_partitions(rows_per_second, spark.sparkContext.defaultParallelism)
+    return (
+        spark.readStream.format(fmt)
+        .option(opt, rows_per_second)
+        .option("numPartitions", parts)
+        .load()
+    )
 
 
 def _user(col):

@@ -5,6 +5,7 @@ state store. Plus the checkpointed sinks (K3) and foreachBatch (K4)."""
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 from pyspark.sql import functions as F
@@ -203,6 +204,54 @@ def test_restart_keeps_checkpoint_state_partitions(spark, recorder, tmp_path):
 
     assert parts_of(start_unsized(spark, sdf, drain, ckpt, 4)) == {4}
     assert parts_of(for_each_batch(sdf, drain, checkpoint=ckpt)) == {4}
+
+
+def test_restart_across_checkpoint_managers(spark, tmp_path):
+    """A checkpoint written through Spark's default (FileContext)
+    manager restarts through for_each_batch, on the FileSystem manager:
+    it resumes after the committed batches and the windows of batches
+    0-3 equal those of an uninterrupted run."""
+    from test_checkpoint_manager import FC_MANAGER, FS_MANAGER, query_manager
+    from test_sink_sizing import join_windows, start_unsized
+
+    n_batches = 4
+
+    def collect_into(out):
+        def collect(df, batch_id):
+            out[batch_id] = [tuple(r) for r in df.collect()]
+        return collect
+
+    def run_until(q, out, last):
+        try:
+            deadline = time.time() + 120
+            while last not in out and time.time() < deadline:
+                assert q.isActive, q.exception()
+                time.sleep(0.1)
+            assert last in out, f"batch {last} not reached"
+        finally:
+            q.stop()
+
+    whole: dict[int, list] = {}
+    run_until(for_each_batch(join_windows(spark), collect_into(whole),
+                             checkpoint=str(tmp_path / "whole")), whole, n_batches - 1)
+
+    ckpt = str(tmp_path / "ckpt")
+    first: dict[int, list] = {}
+    q = start_unsized(spark, join_windows(spark), collect_into(first), ckpt, 4)
+    assert query_manager(q) == FC_MANAGER
+    run_until(q, first, 1)
+    committed = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+
+    resumed: dict[int, list] = {}
+    q = for_each_batch(join_windows(spark), collect_into(resumed), checkpoint=ckpt)
+    assert query_manager(q) == FS_MANAGER
+    run_until(q, resumed, max(n_batches - 1, committed + 1))
+    assert min(resumed) == committed + 1
+
+    emitted = {**first, **resumed}
+    rows = sorted(r for b in range(n_batches) for r in emitted[b])
+    assert rows, "no window was emitted"
+    assert rows == sorted(r for b in range(n_batches) for r in whole[b])
 
 
 def test_salted_sum_equals_direct(spark):
