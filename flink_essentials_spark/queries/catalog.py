@@ -12,11 +12,11 @@ import uuid
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_essentials_spark.queries import dataflow, llmdata, relational
-from flink_essentials_spark.tables import load_tables, ts_bounds_ms
+from flink_essentials_spark.tables import events_ts_bounds_ms, load_tables
 
 
 @dataclass(frozen=True)
@@ -40,6 +40,71 @@ def _replay_dir() -> str:
     root = scratch_dir("fes_replay_")
     llmdata._STORE_ROOTS.add(root)
     return root
+
+
+def _ordered_replay(
+    ev: DataFrame,
+    ts_ms: Column,
+    lo: int,
+    hi: int,
+    sentinel: Callable[[int], dict[str, list]],
+) -> str:
+    """Write ``ev`` as a TIME-ORDERED file replay and return its dir
+    (read with ``file_replay(..., files_per_trigger=1)``, one file per
+    micro-batch): the rows in TWO range buckets of ``ts_ms`` over
+    enclosing bounds ``lo <= min``, ``hi >= max`` (disjoint,
+    increasing), then two far-future sentinel files,
+    ``sentinel(hi + 40 d)`` to advance the watermark past every real
+    row and ``sentinel(hi + 50 d)`` to enforce and flush (emission
+    lags the advance by one batch). ``sentinel(at_ms)`` gives the
+    sentinel rows as column → values, a timestamp column as epoch
+    microseconds. Files are named and mtime-stamped in replay order.
+
+    Two buckets are the minimum that still replays time-ordered with
+    live state eviction between data batches: every micro-batch pays
+    planning plus stateful state-store commits whatever its data, so
+    batch count is the dominant cost, and each caller's no-early-
+    emission argument holds per bucket boundary. The data files come
+    from ONE single-task partitionBy write; the sentinels are written
+    driver-side with pyarrow, typed as ``ev``'s columns (timestamp[us,
+    tz=UTC], as Spark writes them) — no Spark job."""
+    import glob
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow = {
+        "bigint": pa.int64(),
+        "string": pa.string(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+    }
+    types = {f.name: arrow[f.dataType.simpleString()] for f in ev.schema.fields}
+    bucket = F.least(
+        F.lit(1),
+        F.floor((ts_ms - F.lit(lo)) * 2 / F.lit(hi - lo + 1)).cast("int"),
+    )
+    replay_dir = _replay_dir()
+    stage_dir = os.path.join(replay_dir, "_stage")
+    ev.withColumn("b", bucket).coalesce(1).write.partitionBy("b").parquet(stage_dir)
+    files = [
+        f
+        for i in range(2)
+        for f in sorted(glob.glob(os.path.join(stage_dir, f"b={i}", "*.parquet")))
+    ]
+    for day in (40, 50):
+        cols = sentinel(hi + day * 86400000)
+        files.append(os.path.join(stage_dir, f"sentinel_{day}.parquet"))
+        pq.write_table(
+            pa.table({c: pa.array(v, types[c]) for c, v in cols.items()}), files[-1]
+        )
+    base_mtime = time.time() - 3600
+    for n, f in enumerate(files):
+        dst = os.path.join(replay_dir, f"{n:04d}.parquet")
+        os.rename(f, dst)
+        os.utime(dst, (base_mtime + n, base_mtime + n))
+    return replay_dir
 
 
 def q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,76 +276,31 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _streaming_interval_join_sink(spark, sf_dir, "full_outer")
 
 
+def _join_sentinel(at_ms: int) -> dict[str, list]:
+    """Sentinel rows of the interval-join replays: one row per SIDE so
+    both filtered streams advance (the join watermark is the MIN across
+    inputs)."""
+    return {
+        "event_id": [-1, -2],
+        "user_id": [-1, -1],
+        "event_type": ["signup", "purchase"],
+        "ts": [at_ms * 1000] * 2,
+    }
+
+
 def _streaming_interval_join_sink(
     spark: SparkSession, sf_dir: str, how: str
 ) -> DataFrame:
-    import datetime
-    import glob as _glob
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from flink_essentials_spark.operators.joins import interval_join
     from flink_essentials_spark.queries.util import ms
     from flink_essentials_spark.sinks.sinks import run_to_memory
     from flink_essentials_spark.sources.streaming import file_replay
 
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select("event_id", "user_id", "event_type", "ts")
-    # exact bounds from parquet footer stats (~ms, driver-side) — the
-    # Spark bounds job is only the fallback when stats are absent
-    b = ts_bounds_ms(sf_dir)
-    if b is None:
-        bounds = ev.agg(
-            F.min(F.unix_millis("ts")).alias("lo"),
-            F.max(F.unix_millis("ts")).alias("hi"),
-        ).first()
-        b = (bounds["lo"], bounds["hi"])
-    lo, hi = b
-    # TWO time-range buckets (was 3, r15): the minimum that still
-    # replays time-ordered with live state eviction between data
-    # batches — every micro-batch pays ~1 s of planning + stateful-
-    # operator state-store commits regardless of its data (measured:
-    # 4-row sentinel batches cost ~0.8 s addBatch each), so batch
-    # count is the dominant term; the disjoint-increasing-range
-    # losslessness argument is per-boundary and bucket-count-free,
-    # and the final set is watermark-flush-identical (oracle)
-    bucket = F.least(
-        F.lit(1),
-        F.floor(
-            (F.unix_millis("ts") - F.lit(lo)) * 2 / F.lit(hi - lo + 1)
-        ).cast("int"),
+    ev = load_tables(spark, sf_dir)["events"].select(
+        "event_id", "user_id", "event_type", "ts"
     )
-    replay_dir = _replay_dir()
-    stage_dir = os.path.join(replay_dir, "_stage")
-    ev.withColumn("b", bucket).coalesce(1).write.partitionBy("b").parquet(
-        stage_dir
-    )
-    base_mtime = _time.time() - 3600
-    nxt = 0
-    for i in range(2):
-        for f in sorted(_glob.glob(os.path.join(stage_dir, f"b={i}", "*.parquet"))):
-            dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-            os.rename(f, dst)
-            os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-            nxt += 1
-    for d in (40, 50):  # sentinel batches: advance, then enforce+flush
-        s_ts = datetime.datetime.utcfromtimestamp((hi + d * 86400000) / 1000)
-        tbl = pa.table(
-            {
-                "event_id": pa.array([-1, -2], pa.int64()),
-                "user_id": pa.array([-1, -1], pa.int64()),
-                # one row per SIDE so both filtered streams advance
-                "event_type": pa.array(["signup", "purchase"], pa.string()),
-                "ts": pa.array([s_ts, s_ts], pa.timestamp("us", tz="UTC")),
-            }
-        )
-        dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-        pq.write_table(tbl, dst)
-        os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-        nxt += 1
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    replay_dir = _ordered_replay(ev, F.unix_millis("ts"), lo, hi, _join_sentinel)
     schema = "event_id long, user_id long, event_type string, ts timestamp"
     signups = (
         file_replay(spark, replay_dir, schema, files_per_trigger=1)
@@ -368,78 +388,22 @@ def q_streaming_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-then-rollup — the oracle.
 
     Cost shape (first benched r12: ~8-9 s at sf0.1): TWO file_replay
-    sources re-scan the 5-file replay per micro-batch and the chained
+    sources re-scan the 4-file replay per micro-batch and the chained
     join+window state both checkpoint per batch — the engine's
     chained-stateful floor, tracked by this row like capped_sessions
     tracks the per-key protocol floor; no-data micro-batches are
     disabled (no timers; flush rides the data sentinels — verified
     identical by the oracle)."""
-    import datetime
-    import glob as _glob
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from flink_essentials_spark.operators.joins import interval_join
     from flink_essentials_spark.queries.util import ms
     from flink_essentials_spark.sinks.sinks import run_to_memory
     from flink_essentials_spark.sources.streaming import file_replay
 
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select("event_id", "user_id", "event_type", "ts")
-    # exact bounds from parquet footer stats (~ms, driver-side) — the
-    # Spark bounds job is only the fallback when stats are absent
-    b = ts_bounds_ms(sf_dir)
-    if b is None:
-        bounds = ev.agg(
-            F.min(F.unix_millis("ts")).alias("lo"),
-            F.max(F.unix_millis("ts")).alias("hi"),
-        ).first()
-        b = (bounds["lo"], bounds["hi"])
-    lo, hi = b
-    # TWO time-range buckets (was 3, r15): the minimum that still
-    # replays time-ordered with live state eviction between data
-    # batches — every micro-batch pays ~1 s of planning + stateful-
-    # operator state-store commits regardless of its data (measured:
-    # 4-row sentinel batches cost ~0.8 s addBatch each), so batch
-    # count is the dominant term; the disjoint-increasing-range
-    # losslessness argument is per-boundary and bucket-count-free,
-    # and the final set is watermark-flush-identical (oracle)
-    bucket = F.least(
-        F.lit(1),
-        F.floor(
-            (F.unix_millis("ts") - F.lit(lo)) * 2 / F.lit(hi - lo + 1)
-        ).cast("int"),
+    ev = load_tables(spark, sf_dir)["events"].select(
+        "event_id", "user_id", "event_type", "ts"
     )
-    replay_dir = _replay_dir()
-    stage_dir = os.path.join(replay_dir, "_stage")
-    ev.withColumn("b", bucket).coalesce(1).write.partitionBy("b").parquet(
-        stage_dir
-    )
-    base_mtime = _time.time() - 3600
-    nxt = 0
-    for i in range(2):
-        for f in sorted(_glob.glob(os.path.join(stage_dir, f"b={i}", "*.parquet"))):
-            dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-            os.rename(f, dst)
-            os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-            nxt += 1
-    for d in (40, 50):  # sentinel batches: advance, then enforce+flush
-        s_ts = datetime.datetime.utcfromtimestamp((hi + d * 86400000) / 1000)
-        tbl = pa.table(
-            {
-                "event_id": pa.array([-1, -2], pa.int64()),
-                "user_id": pa.array([-1, -1], pa.int64()),
-                "event_type": pa.array(["signup", "purchase"], pa.string()),
-                "ts": pa.array([s_ts, s_ts], pa.timestamp("us", tz="UTC")),
-            }
-        )
-        dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-        pq.write_table(tbl, dst)
-        os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-        nxt += 1
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    replay_dir = _ordered_replay(ev, F.unix_millis("ts"), lo, hi, _join_sentinel)
     schema = "event_id long, user_id long, event_type string, ts timestamp"
     signups = (
         file_replay(spark, replay_dir, schema, files_per_trigger=1)
@@ -624,7 +588,7 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time SESSION windows (W4's streaming form) on the real
-    streaming path: events replayed TIME-ORDERED in three range-bucket
+    streaming path: events replayed TIME-ORDERED in two range-bucket
     micro-batches, session_window(gap 30 min) keyed by user with a 1 s
     watermark, append mode. Two far-future sentinel batches then push
     the watermark past every real session (emission lags the watermark
@@ -635,81 +599,20 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's watermark (range bucketing makes batch time ranges
     disjoint), so no session is emitted before it is complete. Final
     set equals the batch session assignment — the oracle."""
-    import datetime
-    import os
-    import time as _time
-
     from flink_essentials_spark.operators.windows import session
     from flink_essentials_spark.queries.util import ms
     from flink_essentials_spark.sinks.sinks import run_to_memory
     from flink_essentials_spark.sources.streaming import file_replay
 
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select("user_id", "ts")
-    # exact bounds from parquet footer stats (~ms, driver-side) — the
-    # Spark bounds job is only the fallback when stats are absent
-    b = ts_bounds_ms(sf_dir)
-    if b is None:
-        bounds = ev.agg(
-            F.min(F.unix_millis("ts")).alias("lo"),
-            F.max(F.unix_millis("ts")).alias("hi"),
-        ).first()
-        b = (bounds["lo"], bounds["hi"])
-    lo, hi = b
-    # TWO time-range buckets (was 3, r15): batch count dominates the
-    # per-run cost (planning + per-partition state-store commits each
-    # batch); disjoint increasing ranges keep the no-early-emission
-    # argument bucket-count-free, results oracle-identical
-    bucket = F.least(
-        F.lit(1),
-        F.floor((F.unix_millis("ts") - F.lit(lo)) * 2 / F.lit(hi - lo + 1)).cast("int"),
+    ev = load_tables(spark, sf_dir)["events"].select("user_id", "ts")
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    replay_dir = _ordered_replay(
+        ev,
+        F.unix_millis("ts"),
+        lo,
+        hi,
+        lambda at_ms: {"user_id": [-1], "ts": [at_ms * 1000]},
     )
-    replay_dir = _replay_dir()
-    # ONE single-task partitionBy write produces all three range-bucket
-    # files (r5: the previous three filtered scans + two one-row
-    # createDataFrame writes were FIVE Spark jobs = 12 s of this
-    # query's 22 s at sf0.1); the sentinel files are written
-    # driver-side with pyarrow — no Spark job at all, with
-    # timestamp[us, tz=UTC] physical type to match Spark-written files
-    # under the explicit replay schema.
-    import glob as _glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stage_dir = os.path.join(replay_dir, "_stage")
-    (
-        ev.withColumn("b", bucket)
-        .coalesce(1)
-        .write.partitionBy("b")
-        .parquet(stage_dir)
-    )
-    base_mtime = _time.time() - 3600
-    nxt = 0
-    for i in range(2):
-        for f in sorted(_glob.glob(os.path.join(stage_dir, f"b={i}", "*.parquet"))):
-            dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-            os.rename(f, dst)
-            os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-            nxt += 1
-    for d in (40, 50):  # sentinel batches: advance, then enforce+flush
-        tbl = pa.table(
-            {
-                "user_id": pa.array([-1], pa.int64()),
-                "ts": pa.array(
-                    [
-                        datetime.datetime.utcfromtimestamp(
-                            (hi + d * 86400000) / 1000
-                        )
-                    ],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-            }
-        )
-        dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-        pq.write_table(tbl, dst)
-        os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-        nxt += 1
     stream = file_replay(
         spark, replay_dir, "user_id long, ts timestamp", files_per_trigger=1
     ).withWatermark("ts", "1 second")
@@ -741,7 +644,7 @@ def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) state per key) through applyInPandasWithState with
     EventTimeTimeout timers — the ProcessFunction form of W4/ST6.
     Events are compressed 60x (the q_capped_sessions fixture) and
-    replayed TIME-ORDERED in three range-bucket micro-batches with a
+    replayed TIME-ORDERED in two range-bucket micro-batches with a
     1 s watermark; idle sessions close via event-time timers as the
     watermark sweeps past prev+gap, and two far-future sentinel
     batches flush the rest (the one-batch enforcement lag). Disjoint
@@ -759,28 +662,19 @@ def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     250 keys give the same per-round signal at a quarter the fixed
     tax; the batch twin (capped_sessions, driver row) covers the full
     table."""
-    import datetime
-    import glob as _glob
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from flink_essentials_spark.operators.stateful import keyed_process
     from flink_essentials_spark.operators.windows import CappedSessionProcessor
     from flink_essentials_spark.sinks.sinks import run_to_memory
     from flink_essentials_spark.sources.streaming import file_replay
     from flink_essentials_spark.streaming.watermarks import with_event_time
 
-    t = load_tables(spark, sf_dir)
     base = 1704067200000  # 2024-01-01 UTC, before every event
     ms = F.unix_millis(F.col("ts"))
     compressed = (
         F.lit(base) + F.floor((ms - F.lit(base)) / F.lit(60)).cast("long")
     )
     ev = (
-        t["events"]
+        load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id") % 4 == 0)
         .select(
             "user_id",
@@ -788,60 +682,17 @@ def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             compressed.alias("ts_ms"),
         )
     )
-    # bucketing bounds from the parquet footer stats (~ms), mapped
-    # through the same monotone 60x compression — bounds over ALL
-    # events enclose the sampled keyspace's bounds, and the bucket
-    # expression only needs ENCLOSING bounds (lo <= min, hi >= max)
-    # to produce disjoint increasing ranges; the Spark min/max job
-    # this replaces was one full scan per run (r15, guide §1.2)
-    fb = ts_bounds_ms(sf_dir)
-    if fb is None:
-        bounds = ev.agg(
-            F.min("ts_ms").alias("lo"), F.max("ts_ms").alias("hi")
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-    else:
-        lo = base + (fb[0] - base) // 60
-        hi = base + (fb[1] - base) // 60
-    # TWO time-range buckets (was 3, r15): the per-KEY protocol cost
-    # is keys x BATCHES, so one fewer data batch is ~20% off the
-    # dominant term; disjoint increasing ranges keep every timer
-    # firing during a data batch exactly as before (oracle-identical)
-    bucket = F.least(
-        F.lit(1),
-        F.floor((F.col("ts_ms") - F.lit(lo)) * 2 / F.lit(hi - lo + 1)).cast(
-            "int"
-        ),
+    # the bounds of ALL events, mapped through the same monotone 60x
+    # compression, enclose the sampled keyspace's bounds — all the
+    # range buckets need
+    lo, hi = (base + (b - base) // 60 for b in events_ts_bounds_ms(spark, sf_dir))
+    replay_dir = _ordered_replay(
+        ev,
+        F.col("ts_ms"),
+        lo,
+        hi,
+        lambda at_ms: {"user_id": [-1], "cts": [at_ms * 1000], "ts_ms": [at_ms]},
     )
-    replay_dir = _replay_dir()
-    stage_dir = os.path.join(replay_dir, "_stage")
-    ev.withColumn("b", bucket).coalesce(1).write.partitionBy("b").parquet(
-        stage_dir
-    )
-    base_mtime = _time.time() - 3600
-    nxt = 0
-    for i in range(2):
-        for f in sorted(_glob.glob(os.path.join(stage_dir, f"b={i}", "*.parquet"))):
-            dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-            os.rename(f, dst)
-            os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-            nxt += 1
-    for d in (40, 50):  # sentinel batches: advance, then enforce+flush
-        s_ms = hi + d * 86400000
-        tbl = pa.table(
-            {
-                "user_id": pa.array([-1], pa.int64()),
-                "cts": pa.array(
-                    [datetime.datetime.utcfromtimestamp(s_ms / 1000)],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-                "ts_ms": pa.array([s_ms], pa.int64()),
-            }
-        )
-        dst = os.path.join(replay_dir, f"{nxt:04d}.parquet")
-        pq.write_table(tbl, dst)
-        os.utime(dst, (base_mtime + nxt, base_mtime + nxt))
-        nxt += 1
     stream = with_event_time(
         file_replay(
             spark,

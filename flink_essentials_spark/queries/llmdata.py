@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 
 from flink_essentials_spark.functions import dedup, multimodal, similarity, text
 from flink_essentials_spark.functions.dedup import MINHASH_P, MINHASH_SEEDS
-from flink_essentials_spark.tables import load_tables, table_rows
+from flink_essentials_spark.tables import (
+    events_ts_bounds_ms,
+    load_tables,
+    parquet_rows,
+    table_rows,
+)
 from flink_essentials_spark.routing import single_task_ok
 
 # SQL building blocks shared by oracles
@@ -4887,23 +4892,11 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("ts_ms"),
         F.floor(cents("value") / F.lit(10000)).alias("bucket"),
     )
-    # floor-div midpoint: Spark cast-long TRUNCATES while DuckDB CAST
-    # ROUNDS — explicit floor keeps an odd (min+max) from moving mid.
-    # Footer-derived literal (r15, the ks_drift fix): no bounds scan,
-    # no one-row crossJoin; Spark aggregate stays the fallback.
-    from flink_essentials_spark.tables import ts_bounds_ms
-
-    fb = ts_bounds_ms(sf_dir)
-    if fb is not None:
-        mid = F.lit((fb[0] + fb[1]) // 2)
-    else:
-        mid = F.lit(
-            ev.agg(
-                F.floor((F.min("ts_ms") + F.max("ts_ms")) / F.lit(2))
-                .cast("long")
-                .alias("mid")
-            ).first()["mid"]
-        )
+    # floor-div midpoint literal of the exact bounds (DuckDB's CAST
+    # ROUNDS, so the oracle floors explicitly too): no bounds scan, no
+    # one-row crossJoin
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    mid = F.lit((lo + hi) // 2)
     g = (
         ev.withColumn("mid", mid)
         .groupBy("bucket")
@@ -7636,8 +7629,6 @@ def _trade_pairs_rows(spark: SparkSession, sf_dir: str) -> int:
     FOOTERS (driver-side, ~ms — the table_rows discipline): the
     graph-family consumers use it as the bounded-single-task hint
     (2 × rows = symmetrized edge count). Ensures the store exists."""
-    import pyarrow.parquet as pq
-
     _trade_pairs(spark, sf_dir)  # materialize if needed
     path = _TRADE_STORE[
         (
@@ -7646,11 +7637,7 @@ def _trade_pairs_rows(spark: SparkSession, sf_dir: str) -> int:
             _table_fingerprint(sf_dir, "orders"),
         )
     ]
-    return sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    return parquet_rows(path)
 
 
 def _dbscan_assignment_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7923,15 +7910,9 @@ def _cluster_store_rows(spark: SparkSession, sf_dir: str) -> int:
     """Row count of the materialized DBSCAN assignment store from
     parquet FOOTERS (driver-side, ~ms — the _trade_pairs_rows
     discipline). Ensures the store exists."""
-    import pyarrow.parquet as pq
-
     _dbscan_assignment_store(spark, sf_dir)  # materialize if needed
     path = _CLUSTER_STORE[(sf_dir, _events_fingerprint(sf_dir))]
-    return sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    return parquet_rows(path)
 
 
 def _hdbscan_mst_sql() -> str:
@@ -9069,8 +9050,6 @@ def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _brand_baskets_rows(spark: SparkSession, sf_dir: str) -> int:
     """Row count of the basket store from parquet footers
     (driver-side, ~ms — the _trade_pairs_rows discipline)."""
-    import pyarrow.parquet as pq
-
     _brand_baskets(spark, sf_dir)  # materialize if needed
     path = _BASKET_STORE[
         (
@@ -9079,11 +9058,7 @@ def _brand_baskets_rows(spark: SparkSession, sf_dir: str) -> int:
             _table_fingerprint(sf_dir, "part"),
         )
     ]
-    return sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    return parquet_rows(path)
 
 
 def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9423,25 +9398,13 @@ def q_welch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_essentials_spark.functions.timeseries import welch_t
     from flink_essentials_spark.queries.util import cents
 
-    from flink_essentials_spark.tables import ts_bounds_ms
-
     ev = load_tables(spark, sf_dir)["events"]
     ts = F.unix_millis(F.col("ts"))
-    # integer-midpoint epoch from parquet footer stats (~ms, exact
-    # min/max) — replaces a full-scan bounds aggregate AND the one-row
-    # crossJoin it fed (r15; floor((lo+hi)/2) on exact doubles below
-    # 2^53 equals (lo+hi)//2, the identical oracle arithmetic); the
-    # Spark aggregate stays the stats-absent fallback
-    fb = ts_bounds_ms(sf_dir)
-    if fb is not None:
-        mid = F.lit((fb[0] + fb[1]) // 2)
-    else:
-        row = ev.agg(
-            F.floor((F.min(ts) + F.max(ts)) / F.lit(2))
-            .cast("long")
-            .alias("mid")
-        ).first()
-        mid = F.lit(row["mid"])
+    # integer-midpoint epoch of the exact bounds — no bounds scan, no
+    # one-row crossJoin (floor((lo+hi)/2) on exact doubles below 2^53
+    # equals (lo+hi)//2, the identical oracle arithmetic)
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    mid = F.lit((lo + hi) // 2)
     tagged = ev.select(
         "event_type",
         (ts < mid).alias("is_a"),
@@ -9739,25 +9702,13 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_essentials_spark.functions.timeseries import ks_two_sample
     from flink_essentials_spark.queries.util import cents
 
-    from flink_essentials_spark.tables import ts_bounds_ms
-
     ev = load_tables(spark, sf_dir)["events"]
     ts = F.unix_millis(F.col("ts"))
-    # integer-midpoint epoch from parquet footer stats (~ms, exact
-    # min/max) — replaces a full-scan bounds aggregate AND the one-row
-    # crossJoin it fed (r15; floor((lo+hi)/2) on exact doubles below
-    # 2^53 equals (lo+hi)//2, the identical oracle arithmetic); the
-    # Spark aggregate stays the stats-absent fallback
-    fb = ts_bounds_ms(sf_dir)
-    if fb is not None:
-        mid = F.lit((fb[0] + fb[1]) // 2)
-    else:
-        row = ev.agg(
-            F.floor((F.min(ts) + F.max(ts)) / F.lit(2))
-            .cast("long")
-            .alias("mid")
-        ).first()
-        mid = F.lit(row["mid"])
+    # integer-midpoint epoch of the exact bounds — no bounds scan, no
+    # one-row crossJoin (floor((lo+hi)/2) on exact doubles below 2^53
+    # equals (lo+hi)//2, the identical oracle arithmetic)
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    mid = F.lit((lo + hi) // 2)
     tagged = ev.select(
         "event_type",
         (ts < mid).alias("is_a"),
@@ -11917,20 +11868,9 @@ def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_tables(spark, sf_dir)["events"].select(
         "event_type", F.unix_millis(F.col("ts")).alias("ts_ms")
     )
-    # footer-derived midpoint literal (r15, the ks_drift fix)
-    from flink_essentials_spark.tables import ts_bounds_ms
-
-    fb = ts_bounds_ms(sf_dir)
-    if fb is not None:
-        mid = F.lit((fb[0] + fb[1]) // 2)
-    else:
-        mid = F.lit(
-            ev.agg(
-                F.floor((F.min("ts_ms") + F.max("ts_ms")) / F.lit(2))
-                .cast("long")
-                .alias("mid")
-            ).first()["mid"]
-        )
+    # midpoint literal of the exact bounds (the ks_drift split)
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    mid = F.lit((lo + hi) // 2)
     g = (
         ev.withColumn("mid", mid)
         .groupBy("event_type")
@@ -12379,19 +12319,12 @@ def q_wavelet_synopsis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_tables(spark, sf_dir)["events"].select(
         "event_type", F.unix_millis(F.col("ts")).alias("ts_ms")
     )
-    # footer-derived bounds literals (r15, the ks_drift fix)
-    from flink_essentials_spark.tables import ts_bounds_ms
-
-    fb = ts_bounds_ms(sf_dir)
-    if fb is None:
-        row = ev.agg(
-            F.min("ts_ms").alias("lo"), F.max("ts_ms").alias("hi")
-        ).first()
-        fb = (row["lo"], row["hi"])
+    # bounds literals (no bounds scan, no one-row crossJoin)
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
     n = 16
     g = (
-        ev.withColumn("lo", F.lit(fb[0]))
-        .withColumn("hi", F.lit(fb[1]))
+        ev.withColumn("lo", F.lit(lo))
+        .withColumn("hi", F.lit(hi))
         .select(
             "event_type",
             F.expr(f"((ts_ms - lo) * {n}) div (hi - lo + 1)").alias("b"),
@@ -12711,25 +12644,13 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_essentials_spark.functions.timeseries import mann_whitney_u
     from flink_essentials_spark.queries.util import cents
 
-    from flink_essentials_spark.tables import ts_bounds_ms
-
     ev = load_tables(spark, sf_dir)["events"]
     ts = F.unix_millis(F.col("ts"))
-    # integer-midpoint epoch from parquet footer stats (~ms, exact
-    # min/max) — replaces a full-scan bounds aggregate AND the one-row
-    # crossJoin it fed (r15; floor((lo+hi)/2) on exact doubles below
-    # 2^53 equals (lo+hi)//2, the identical oracle arithmetic); the
-    # Spark aggregate stays the stats-absent fallback
-    fb = ts_bounds_ms(sf_dir)
-    if fb is not None:
-        mid = F.lit((fb[0] + fb[1]) // 2)
-    else:
-        row = ev.agg(
-            F.floor((F.min(ts) + F.max(ts)) / F.lit(2))
-            .cast("long")
-            .alias("mid")
-        ).first()
-        mid = F.lit(row["mid"])
+    # integer-midpoint epoch of the exact bounds — no bounds scan, no
+    # one-row crossJoin (floor((lo+hi)/2) on exact doubles below 2^53
+    # equals (lo+hi)//2, the identical oracle arithmetic)
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    mid = F.lit((lo + hi) // 2)
     tagged = ev.select(
         "event_type",
         (ts < mid).alias("is_a"),
@@ -12794,25 +12715,13 @@ def q_cm_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and the error are bit-identical cross-engine."""
     from flink_essentials_spark.functions.approx import cm_sketch
 
-    from flink_essentials_spark.tables import ts_bounds_ms
-
     ev = load_tables(spark, sf_dir)["events"].select(
         "user_id", F.unix_millis(F.col("ts")).alias("ts_ms")
     )
-    # footer-derived midpoint literal (the ks_drift r15 fix): no
-    # bounds scan, no one-row crossJoin, and the checkpoint that
-    # existed to avoid re-running them is unnecessary — ra/rb are
-    # plain filtered scans now
-    fb = ts_bounds_ms(sf_dir)
-    if fb is not None:
-        mid = F.lit((fb[0] + fb[1]) // 2)
-    else:
-        row = ev.agg(
-            F.floor((F.min("ts_ms") + F.max("ts_ms")) / F.lit(2))
-            .cast("long")
-            .alias("mid")
-        ).first()
-        mid = F.lit(row["mid"])
+    # midpoint literal of the exact bounds: no bounds scan, no one-row
+    # crossJoin, so ra/rb are plain filtered scans
+    lo, hi = events_ts_bounds_ms(spark, sf_dir)
+    mid = F.lit((lo + hi) // 2)
     ra = ev.filter(F.col("ts_ms") < mid)
     rb = ev.filter(F.col("ts_ms") >= mid)
     sa = cm_sketch(ra, "user_id").withColumnRenamed("cnt", "ca")

@@ -149,7 +149,17 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _parquet_layout(path: str, max_files: int) -> tuple[int, int]:
+def _parquet_files(path: str, max_files: int | None = None) -> list[str]:
+    """The parquet files of a table path (a single file, or a directory
+    listed in name order), at most ``max_files`` of them."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )[:max_files]
+
+
+def _parquet_layout(path: str, max_files: int | None) -> tuple[int, int]:
     """(num_rows, num_row_groups) from parquet footers via pyarrow —
     driver-side metadata reads (~ms), replacing the Spark jobs the
     respread sizing used to cost (an ``.rdd`` conversion + a ``count()``
@@ -160,27 +170,27 @@ def _parquet_layout(path: str, max_files: int) -> tuple[int, int]:
     """
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )[:max_files]
-    else:
-        files = [path]
     rows = groups = 0
-    for f in files:
+    for f in _parquet_files(path, max_files):
         md = pq.ParquetFile(f).metadata
         rows += md.num_rows
         groups += md.num_row_groups
     return rows, groups
 
 
+def parquet_rows(path: str, max_files: int | None = None) -> int:
+    """Footer-derived row count of a parquet file or directory (a
+    testdata table or a materialized store; every file unless capped
+    at ``max_files``) — driver-side pyarrow metadata (~ms), never a
+    Spark job."""
+    return _parquet_layout(path, max_files=max_files)[0]
+
+
 def table_rows(sf_dir: str, name: str, max_files: int = 4096) -> int:
-    """Footer-derived row count of a testdata table — driver-side
-    pyarrow metadata (~ms), never a Spark job. For sizing decisions
-    (e.g. similarity.auto_blocks) that must not materialize a plan."""
-    return _parquet_layout(table_path(sf_dir, name), max_files=max_files)[0]
+    """Footer-derived row count of a testdata table. For sizing
+    decisions (e.g. similarity.auto_blocks) that must not materialize
+    a plan."""
+    return parquet_rows(table_path(sf_dir, name), max_files=max_files)
 
 
 def ts_bounds_ms(
@@ -196,22 +206,12 @@ def ts_bounds_ms(
     max(unix_millis(ts)))`` returns. Handles both physical encodings
     the driver's generator has produced (timestamp[us] → datetime
     stats; int64 nanos → integer stats). Returns ``None`` when any
-    row group lacks exact min/max stats — callers then fall back to
-    the Spark aggregate."""
+    row group lacks exact min/max stats — ``events_ts_bounds_ms`` then
+    falls back to the Spark aggregate."""
     import datetime as _dt
 
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    files = (
-        sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        if os.path.isdir(path)
-        else [path]
-    )
     epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
     def _ms(v) -> int:
@@ -225,7 +225,7 @@ def ts_bounds_ms(
         return (int(v) // 1000) // 1000
 
     lo = hi = None
-    for f in files:
+    for f in _parquet_files(table_path(sf_dir, name)):
         md = pq.ParquetFile(f).metadata
         try:
             idx = next(
@@ -302,6 +302,19 @@ def load_tables(
         tables[name] = df
     _TABLE_CACHE[key] = tables
     return tables
+
+
+def events_ts_bounds_ms(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
+    """EXACT (min, max) epoch-milliseconds of ``events.ts``: the footer
+    statistics (``ts_bounds_ms``), else one Spark aggregate over the
+    loaded table when a row group lacks them. Both give the values
+    ``agg(min(unix_millis(ts)), max(unix_millis(ts)))`` returns."""
+    b = ts_bounds_ms(sf_dir)
+    if b is not None:
+        return b
+    ms = F.unix_millis("ts")
+    row = load_tables(spark, sf_dir)["events"].agg(F.min(ms), F.max(ms)).first()
+    return row[0], row[1]
 
 
 def register_views(

@@ -40,3 +40,21 @@ def recorder(spark):
     spark.streams.addListener(rec)
     yield rec
     spark.streams.removeListener(rec)
+
+
+@pytest.fixture(scope="session")
+def stripped_sf(tmp_path_factory):
+    """A copy of the sf0.001 testdata whose events.parquet carries no
+    column statistics, so footer-derived bounds are unavailable."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    src = "/root/testdata/sf0.001"
+    dst = tmp_path_factory.mktemp("sf0.001_stripped")
+    for f in os.listdir(src):
+        if f == "events.parquet":
+            pq.write_table(pq.read_table(os.path.join(src, f)), str(dst / f), write_statistics=False)
+        else:
+            shutil.copyfile(os.path.join(src, f), str(dst / f))
+    return str(dst)

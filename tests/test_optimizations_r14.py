@@ -9,8 +9,9 @@ optimization relies on:
   rows as the screening path and returns None;
 - the Mondrian bounded single-task cell ladder equals the original
   distributed row-level rounds;
-- tables.ts_bounds_ms (parquet footer stats) equals the Spark bounds
-  aggregate it replaced, per scale factor;
+- tables.events_ts_bounds_ms (parquet footer stats, else the Spark
+  fallback) equals the Spark bounds aggregate, per scale factor and
+  with the stats stripped;
 - source_overlap(gs_df=...) equals the self-computed path.
 """
 
@@ -184,19 +185,28 @@ def test_mondrian_cell_ladder_equals_distributed_rounds(spark):
 
 @pytest.mark.parametrize(
     "sf_dir",
-    ["/root/testdata/sf0.001", "/root/testdata/sf0.01"],
+    ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "stats stripped"],
 )
-def test_ts_bounds_ms_equals_spark_agg(spark, sf_dir):
-    from flink_essentials_spark.tables import load_tables, ts_bounds_ms
+def test_ts_bounds_ms_equals_spark_agg(spark, sf_dir, request):
+    """events_ts_bounds_ms equals the Spark bounds aggregate: from the
+    footer stats the driver testdata carries, and through the Spark
+    fallback on a copy written without statistics."""
+    from flink_essentials_spark.tables import (
+        events_ts_bounds_ms,
+        load_tables,
+        ts_bounds_ms,
+    )
 
-    got = ts_bounds_ms(sf_dir)
-    assert got is not None  # driver testdata carries footer stats
+    stripped = sf_dir == "stats stripped"
+    if stripped:
+        sf_dir = request.getfixturevalue("stripped_sf")
+    assert (ts_bounds_ms(sf_dir) is None) == stripped
     ev = load_tables(spark, sf_dir)["events"]
     ref = ev.agg(
         F.min(F.unix_millis("ts")).alias("lo"),
         F.max(F.unix_millis("ts")).alias("hi"),
     ).first()
-    assert got == (ref["lo"], ref["hi"])
+    assert events_ts_bounds_ms(spark, sf_dir) == (ref["lo"], ref["hi"])
 
 
 def test_ts_bounds_ms_missing_stats_returns_none(tmp_path):
