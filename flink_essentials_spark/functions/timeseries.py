@@ -422,41 +422,45 @@ def _ecdf_cums(
 def grouped_topk(
     df: DataFrame,
     keys: list[str],
-    order_col: str,
-    tiebreak_cols: list[str],
+    order: list,
     k: int,
     rank_col: str = "rk",
 ) -> DataFrame:
-    """Top-``k`` rows per key by ``(order_col, *tiebreak_cols)``
-    ascending, for GROUPS WITH A DATA-INDEPENDENT BOUND (a vocabulary,
-    a fixed candidate list): one aggregate —
-    sort_array(collect_list(struct)) sliced to k, then posexplode —
-    instead of a rank window. banded_rank answers the same question
-    for unbounded groups in ~3 passes (bounds, band totals, final
-    window); on a bounded group that machinery is pure scheduling
-    (r15: chi2_terms spent 18 jobs ranking a ~31-word vocabulary).
-    collect_list materializes one group per task, so the caller must
-    guarantee the per-group bound. ``(order_col, *tiebreak_cols)``
-    must be a total order within each key (the banded_rank contract);
-    remaining columns ride in the struct tail and never influence the
-    order. Returns the top rows with a 1-based ``rank_col``."""
-    others = [
-        c
-        for c in df.columns
-        if c not in set(keys) | {order_col} | set(tiebreak_cols)
-    ]
-    s = F.struct(order_col, *tiebreak_cols, *others)
-    agg = df.groupBy(*keys).agg(
-        F.slice(F.sort_array(F.collect_list(s)), 1, k).alias("__top")
-    )
-    ex = agg.select(
-        *keys, F.posexplode("__top").alias("__pos", "__row")
-    )
-    return ex.select(
-        *keys,
-        *[F.col(f"__row.{c}") for c in [order_col, *tiebreak_cols, *others]],
-        (F.col("__pos") + 1).alias(rank_col),
-    )
+    """Top-``k`` rows per key, or overall when ``keys`` is empty, by
+    ``order``: sort Columns whose direction the caller states
+    (``F.col("v").desc()``), a total order within each key. Returns
+    df's columns plus a 1-based long ``rank_col``.
+
+    Both forms keep bounded state: with keys, ``row_number() <= k``
+    over the key partition plans ``WindowGroupLimit … Partial`` before
+    the shuffle (at most k rows per key per input partition move); with
+    no keys, ``orderBy(...).limit(k)`` plans ``TakeOrderedAndProject``
+    and the rank rides its <= k rows. Above the session's
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` Spark inserts no
+    partial limit, so a keyed ``k`` above it raises ValueError."""
+    directed = ("NULLS FIRST'>", "NULLS LAST'>")
+    if not all(str(c).endswith(directed) for c in order):
+        raise ValueError(
+            "grouped_topk: state each order column's direction, e.g. "
+            f"F.col('v').desc(); got {order}"
+        )
+    if keys:
+        conf = "spark.sql.optimizer.windowGroupLimitThreshold"
+        limit = int(df.sparkSession.conf.get(conf))
+        if k > limit:
+            raise ValueError(
+                f"grouped_topk: k={k} is above {conf}={limit}, under "
+                "which Spark limits each key before the shuffle"
+            )
+        w = Window.partitionBy(*keys).orderBy(*order)
+        ranked = df.withColumn(rank_col, F.row_number().over(w)).filter(
+            F.col(rank_col) <= k
+        )
+    else:
+        ranked = df.orderBy(*order).limit(k).withColumn(
+            rank_col, F.row_number().over(Window.orderBy(*order))
+        )
+    return ranked.withColumn(rank_col, F.col(rank_col).cast("long"))
 
 
 # Row bound under which banded_rank runs as ONE Arrow task: the
@@ -478,12 +482,16 @@ def _banded_rank_single_task(
 ) -> DataFrame:
     """Bounded single-task twin of :func:`banded_rank`: one lexsort by
     (key, value, tiebreaks...) and a per-key position subtraction —
-    the identical 1-based per-key row rank (numeric sort columns sort
-    identically in numpy and Spark; the routing gate enforces
-    numeric). Ties beyond the tiebreaks order arbitrarily in BOTH
-    forms (same contract). Pinned equal by test."""
+    the identical 1-based per-key row rank. Rows stay Arrow record
+    batches (mapInArrow), so int64 values keep every bit and a null
+    stays distinct from NaN; each sort column sorts as (not-null,
+    null-filled value), i.e. nulls first and NaN last, which is Spark's
+    ascending order (the routing gate keeps sort columns numeric). Ties
+    beyond the tiebreaks order arbitrarily in BOTH forms (same
+    contract). Pinned equal by test."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.types import LongType, StructField, StructType
 
     # fresh StructType — .add would MUTATE the frame's cached schema
@@ -494,22 +502,32 @@ def _banded_rank_single_task(
     sort_cols = [value_col, *tiebreak_cols]
 
     def work(batches):
-        frames = [p for p in batches if len(p)]
-        if not frames:
+        parts = [b for b in batches if b.num_rows]
+        if not parts:
             return
-        pdf = pd.concat(frames, ignore_index=True)
-        n = len(pdf)
-        arrs = [pdf[c].to_numpy() for c in sort_cols]
+        tbl = pa.Table.from_batches(parts)
+        n = tbl.num_rows
+        codes = [
+            pc.fill_null(
+                tbl.column(c).combine_chunks().dictionary_encode().indices,
+                -1,
+            ).to_numpy()
+            for c in kc
+        ]
+        sort_keys = []
+        for c in sort_cols:
+            a = tbl.column(c).combine_chunks()
+            sort_keys.append(a.is_valid().to_numpy(zero_copy_only=False))
+            sort_keys.append(
+                pc.fill_null(a, 0).to_numpy(zero_copy_only=False)
+            )
+        order = np.lexsort(tuple(reversed([*codes, *sort_keys])))
         if kc:
-            if len(kc) == 1:
-                kcodes = pd.factorize(pdf[kc[0]])[0]
-            else:
-                kcodes = pd.MultiIndex.from_frame(pdf[kc]).factorize()[0]
-            order = np.lexsort(tuple([*reversed(arrs), kcodes]))
-            ks = kcodes[order]
-            starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
+            ks = np.stack([c[order] for c in codes])
+            starts = np.flatnonzero(
+                np.r_[True, (ks[:, 1:] != ks[:, :-1]).any(axis=0)]
+            )
         else:
-            order = np.lexsort(tuple(reversed(arrs)))
             starts = np.array([0], dtype=np.int64)
         sizes = np.diff(np.r_[starts, n])
         rank_sorted = (
@@ -519,11 +537,12 @@ def _banded_rank_single_task(
         # the window ladder produces (row order is not a declared
         # result, but downstream collect()-order assumptions keep
         # holding; r15: an rrf reference test relied on it)
-        pdf = pdf.iloc[order].reset_index(drop=True)
-        pdf[rank_col] = rank_sorted
-        yield pdf
+        out = tbl.take(pa.array(order)).append_column(
+            rank_col, pa.array(rank_sorted, pa.int64())
+        )
+        yield from out.to_batches()
 
-    return df.coalesce(1).mapInPandas(work, schema)
+    return df.coalesce(1).mapInArrow(work, schema)
 
 
 def banded_rank(
@@ -538,26 +557,30 @@ def banded_rank(
     """Exact per-key dense ROW rank (row_number over (value,
     tiebreaks...) ascending) with NO single-task per-key sort — the
     scale-safe replacement for ``row_number() over (partition by
-    <low-cardinality key>)``: per-key value span splits into ~``bands``
-    monotone bands (the _ecdf_cums two-phase shape), band totals prefix
-    over the tiny key×band series, and every data-sized window is keyed
-    by (key, band). Equal values always land in the same band (the band
-    is a function of the value), so offset + within-band row_number ==
-    the global per-key row_number for ANY banding — band granularity
-    shapes the plan, never the ranks.
+    <low-cardinality key>)`` when EVERY row needs its rank: per-key
+    value span splits into ~``bands`` monotone bands (the _ecdf_cums
+    two-phase shape), band totals prefix over the tiny key×band series,
+    and every data-sized window is keyed by (key, band). Equal values
+    always land in the same band (the band is a function of the value),
+    so offset + within-band row_number == the global per-key row_number
+    for ANY banding — band granularity shapes the plan, never the
+    ranks. A rank filtered to ``<= k`` is a top-K: use
+    :func:`grouped_topk`, whose state stays bounded.
 
-    ``value_col`` must be numeric: integral types band via the
-    overflow-free divide-first form; fractional types band via float
-    division (banding floats is safe here because band boundaries
-    cannot change the exact ranks). Ordering is (value ASC,
-    tiebreaks ASC); for a DESC rank pass the negated value. Returns
-    df's columns plus ``rank_col`` (long, 1-based).
+    ``value_col`` must be numeric. Bands come from double arithmetic on
+    the value's offset within the key's [lo, hi] span, taken over
+    non-NaN values; every step is monotone, so int64 extremes band
+    without overflow. Ordering is Spark's (value ASC NULLS FIRST,
+    tiebreaks ASC NULLS FIRST): nulls get their own band before band 0
+    and NaN its own band after the last one. For a DESC rank pass the
+    negated value. Returns df's columns plus ``rank_col`` (long,
+    1-based).
 
     ``n_rows_hint`` (footer-derived or otherwise known driver-side)
     under ``BANDED_RANK_SINGLE_TASK_ROWS`` routes to the bounded
-    single-task twin when every sort column is NUMERIC and non-null
-    (numpy and Spark then sort identically); the banded ladder below
-    is the above-bound shape (r15)."""
+    single-task twin when every sort column is NUMERIC (numpy and Spark
+    then sort identically); the banded ladder below is the above-bound
+    shape (r15)."""
     from pyspark.sql.types import NumericType
 
     from flink_essentials_spark.routing import single_task_ok
@@ -570,10 +593,11 @@ def banded_rank(
             df, key_cols, value_col, tiebreak_cols, rank_col
         )
     kc = list(key_cols)
-    dtype = df.schema[value_col].dataType.simpleString()
     v = F.col(value_col)
+    x = v.cast("double")
     bounds = df.groupBy(*kc).agg(
-        F.min(value_col).alias("__br_lo"), F.max(value_col).alias("__br_hi")
+        F.min(F.when(~F.isnan(x), x)).alias("__br_lo"),
+        F.max(F.when(~F.isnan(x), x)).alias("__br_hi"),
     )
     # empty key list = one global rank (still banded: the only
     # unbounded-input window is keyed by band; the offsets window rides
@@ -583,28 +607,20 @@ def banded_rank(
         if kc
         else df.crossJoin(F.broadcast(bounds))
     )
-    if dtype in ("tinyint", "smallint", "int", "bigint"):
-        band = F.expr(
-            f"CASE WHEN (__br_hi - __br_lo + 1) >= {int(bands)} "
-            f"THEN ({value_col} - __br_lo) "
-            f"div ((__br_hi - __br_lo + 1) div {int(bands)}) "
-            f"ELSE ({value_col} - __br_lo) END"
+    lo, hi = F.col("__br_lo"), F.col("__br_hi")
+    # halved operands never overflow; the ratio is in [0, 1], or NaN
+    # when a bound is infinite — least() sends NaN to the last band
+    frac = (x / 2 - lo / 2) / (hi / 2 - lo / 2)
+    band = (
+        F.when(v.isNull(), F.lit(-1))
+        .when(F.isnan(x), F.lit(int(bands)))
+        .when(x <= lo, F.lit(0))
+        .when(x >= hi, F.lit(int(bands) - 1))
+        .otherwise(
+            F.floor(F.least(frac * int(bands), F.lit(float(bands - 1))))
         )
-    else:
-        span = F.col("__br_hi").cast("double") - F.col("__br_lo").cast("double")
-        band = (
-            F.least(
-                F.lit(int(bands) - 1),
-                F.floor(
-                    F.when(
-                        span > 0,
-                        (v.cast("double") - F.col("__br_lo").cast("double"))
-                        / span
-                        * F.lit(int(bands)),
-                    ).otherwise(F.lit(0.0))
-                ),
-            )
-        ).cast("long")
+        .cast("long")
+    )
     banded = j.withColumn("__br_band", band)
     btot = banded.groupBy(*kc, "__br_band").agg(
         F.count(F.lit(1)).alias("__br_n")

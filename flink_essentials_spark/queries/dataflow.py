@@ -534,22 +534,20 @@ FROM (SELECT event_type,
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 events by value per event_type — the reference's driver-side
     maxBy (Windows.scala:389-391) done IN-ENGINE (deterministic
-    tiebreak). The rank is a BANDED rank (timeseries.banded_rank):
-    event_type is low-cardinality, so a plain per-type row_number would
-    sort each type's whole history in one task."""
-    from flink_essentials_spark.functions.timeseries import banded_rank
+    tiebreak), ordered as the oracle states it (value DESC: NaN first,
+    nulls last). timeseries.grouped_topk keeps at most 3 rows per type
+    per input partition before the shuffle, so no task sorts a whole
+    low-cardinality type's history."""
+    from flink_essentials_spark.functions.timeseries import grouped_topk
 
     t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        "event_type", "event_id", "value", (-F.col("value")).alias("__nv")
-    )
-    return (
-        banded_rank(ev, ["event_type"], "__nv", ["event_id"], rank_col="rk")
-        .filter(F.col("rk") <= 3)
-        .select(
-            "event_type", "event_id", "value",
-            F.col("rk").cast("int").alias("rk"),
-        )
+    order = [F.col("value").desc(), F.col("event_id").asc_nulls_last()]
+    return grouped_topk(
+        t["events"].select("event_type", "event_id", "value"),
+        ["event_type"],
+        order,
+        k=3,
+        rank_col="rk",
     )
 
 

@@ -9293,13 +9293,14 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exact integers, and the fused sum adds two identical
     doubles — bit-exact cross-engine, no rounding. Scale shape (the
     r10-verdict fix): BM25 for all queries in ONE scan (bm25_multi),
-    the shared candidate table localCheckpointed, and every ranking a
-    BANDED rank (timeseries.banded_rank) — no ``row_number() over
-    (partition by query_id)`` full-corpus sort anywhere; every
-    data-sized window is keyed by (query, band). This is the
+    the shared candidate table localCheckpointed, both full rankings
+    BANDED ranks (timeseries.banded_rank) and the fused top-20 a
+    grouped_topk (<= 20 rows per query per partition reach the
+    shuffle) — no ``row_number() over (partition by query_id)``
+    full-corpus sort anywhere. This is the
     retrieval-pipeline composition the BM25 and lm_score rows exist
     for."""
-    from flink_essentials_spark.functions.timeseries import banded_rank
+    from flink_essentials_spark.functions.timeseries import grouped_topk
 
     j = _rrf_candidates(spark, sf_dir)
     rrf = (
@@ -9308,20 +9309,13 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fused = j.select("query_id", "doc_id", "r_bm25", "r_prior").withColumn(
         "rrf", rrf
-    ).withColumn("nrrf", -F.col("rrf"))
-    return (
-        banded_rank(
-            fused,
-            ["query_id"],
-            "nrrf",
-            ["doc_id"],
-            rank_col="__rk",
-            # docs x |queries| candidate bound (r15)
-            n_rows_hint=table_rows(sf_dir, "documents") * len(_RRF_QUERIES),
-        )
-        .filter(F.col("__rk") <= 20)
-        .select("query_id", "doc_id", "r_bm25", "r_prior", "rrf")
     )
+    return grouped_topk(
+        fused,
+        ["query_id"],
+        [F.col("rrf").desc(), F.col("doc_id").asc_nulls_last()],
+        k=20,
+    ).select("query_id", "doc_id", "r_bm25", "r_prior", "rrf")
 
 
 def _rrf_sql() -> str:
@@ -12880,20 +12874,17 @@ def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("b") + F.col("d")).cast("double")
     )
     chi2 = n * diff * diff / den
-    scored = g.select(
-        "lang", "w", "a", "b", "c", "d", chi2.alias("chi2"),
-        (-chi2).alias("nchi2"),
-    )
-    # top-5 per lang: the scored table is VOCABULARY-bounded per
-    # language, so one sort_array(collect_list) aggregate replaces
-    # both a row_number window (banned low-card partition) and the
-    # banded-rank ladder (r15: its bounds/band-totals passes were 18
-    # jobs here — pure scheduling on a ~31-word vocabulary)
+    scored = g.select("lang", "w", "a", "b", "c", "d", chi2.alias("chi2"))
+    # top-5 per lang, ordered as the oracle states it (chi2 DESC, w)
     from flink_essentials_spark.functions.timeseries import grouped_topk
 
     return grouped_topk(
-        scored, ["lang"], "nchi2", ["w"], k=5, rank_col="rk"
-    ).select("lang", "w", "a", "b", "c", "d", "chi2", "rk")
+        scored,
+        ["lang"],
+        [F.col("chi2").desc(), F.col("w").asc_nulls_last()],
+        k=5,
+        rank_col="rk",
+    )
 
 
 Q_CHI2_TERMS_SQL = f"""
@@ -14134,7 +14125,7 @@ Q_INFO_GAIN_STUMP_SQL = _info_gain_stump_sql()
 # Store-row bound under which slope_one_devs runs as one Arrow task:
 # 2^20 (cust, supp) rows × avg basket ~40 keep the enumerated pair
 # count around 40M and the bincount code space supp²; above it the
-# per-cust self-join + banded rank is the 100 TB shape.
+# per-cust self-join + bounded top-K is the 100 TB shape.
 SLOPE_ONE_SINGLE_TASK_ROWS = 1 << 20
 
 
@@ -14239,18 +14230,19 @@ def q_slope_one_devs(spark: SparkSession, sf_dir: str) -> DataFrame:
     item-pair combinations are scan-stage (bounded by basket size —
     the association_rules discipline), the equi-self-join keys on
     cust, and the output is item-pair-bounded regardless of user
-    count. Top-20 pairs by |dev| via banded GLOBAL rank (no
-    single-task sort).
+    count. Top-20 pairs by |dev| via grouped_topk with no keys: a
+    bounded heap per partition (TakeOrderedAndProject), no sort of the
+    pair model.
 
     r14: under ``SLOPE_ONE_SINGLE_TASK_ROWS`` store rows
     (footer-derived) the whole pair model runs as ONE Arrow task —
     the per-cust equi-self-join explodes ~20× at sf0.1 (587k store
-    rows → 11M pair rows through a shuffle + two banded_rank passes)
+    rows → 11M pair rows through a shuffle and a top-K)
     for a computation that is run-length pair enumeration + two
     bincounts over a supp²-bounded code space. Exact integer cells,
     identical (−|dev_num|, supp_a, supp_b) rank order; distributed
     path unchanged above the bound. Pinned equal by test."""
-    from flink_essentials_spark.functions.timeseries import banded_rank
+    from flink_essentials_spark.functions.timeseries import grouped_topk
 
     if single_task_ok(_trade_pairs_rows(spark, sf_dir), SLOPE_ONE_SINGLE_TASK_ROWS):
         return _slope_one_devs_single_task(_trade_pairs(spark, sf_dir))
@@ -14270,9 +14262,6 @@ def q_slope_one_devs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("r_a") - F.col("r_b")).alias("dev_num"),
         )
     )
-    # banded_rank reads its input ~3x (bounds, band totals, final
-    # window) — checkpoint the pair model so the per-user pair
-    # self-join runs once (measured 4.9 -> ~2 s at sf0.1)
     scored = devs.select(
         "supp_a",
         "supp_b",
@@ -14281,19 +14270,11 @@ def q_slope_one_devs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dev_num").cast("double") / F.col("n_co").cast("double")).alias(
             "dev"
         ),
-        (-F.abs("dev_num")).alias("__nad"),
-    ).localCheckpoint()
-    ranked = banded_rank(
-        scored,
-        [],
-        "__nad",
-        ["supp_a", "supp_b"],
-        rank_col="rk",
     )
-    return (
-        ranked.filter(F.col("rk") <= 20)
-        .select("supp_a", "supp_b", "n_co", "dev_num", "dev", "rk")
-    )
+    order = [
+        F.abs("dev_num").desc(), F.col("supp_a").asc(), F.col("supp_b").asc()
+    ]
+    return grouped_topk(scored, [], order, k=20, rank_col="rk")
 
 
 Q_SLOPE_ONE_DEVS_SQL = """

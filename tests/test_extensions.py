@@ -3769,67 +3769,72 @@ def test_gram_matrix_maintained_over_a_stream_equals_batch(spark, tmp_path):
 
 def test_banded_rank_equals_row_number(spark):
     """banded_rank == row_number over (value, tiebreaks) for every
-    band count, on longs (negatives + heavy ties), doubles, a
-    zero-span key, a key smaller than the band count, and the global
-    (keys=[]) form — banding granularity must never change a rank."""
+    band count, on longs (negatives, heavy ties, nulls, int64
+    extremes), doubles (nulls, NaN, infinities, signed zeros), a
+    zero-span key, an all-null key, a key smaller than the band count,
+    and the global (keys=[]) form — banding granularity must never
+    change a rank, and Spark's ascending order puts nulls first and NaN
+    last. The single-task twin must agree on the same inputs."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from flink_essentials_spark.functions.timeseries import banded_rank
+    from flink_essentials_spark.functions.timeseries import (
+        _banded_rank_single_task,
+        banded_rank,
+    )
 
+    lo, hi = -(1 << 63), (1 << 63) - 1
     rows = []
-    vals = [5, -3, 5, 0, 7, -3, 2, 2, 2, 100, -50, 9999999]
+    vals = [5, -3, 5, 0, 7, -3, 2, 2, None, 2, 100, -50, 9999999, None]
+    vals += [hi, lo, hi - 1, lo + 1, hi]
     rows += [("a", i, v) for i, v in enumerate(vals)]
     rows += [("b", i, 42) for i in range(5)]  # zero span
     rows += [("c", 0, 1), ("c", 1, 0)]  # tiny key
+    rows += [("d", 0, None), ("d", 1, None)]  # no non-null value
+    rows += [("e", 0, lo), ("e", 1, hi)]  # span above int64
     df = spark.createDataFrame(rows, "k string, id long, v long")
-    want = df.select(
-        "k",
-        "id",
-        F.row_number()
-        .over(W.partitionBy("k").orderBy("v", "id"))
-        .cast("long")
-        .alias("rk"),
-    )
-    wanted = {(r["k"], r["id"]): r["rk"] for r in want.collect()}
-    for bands in (1, 2, 4, 64, 1000):
-        got = banded_rank(df, ["k"], "v", ["id"], bands=bands, rank_col="rk")
-        assert {
-            (r["k"], r["id"]): r["rk"] for r in got.collect()
-        } == wanted, bands
-
-    # doubles (float banding) and the global form
-    dfd = df.select("k", "id", (F.col("v") / 7.0).alias("v"))
-    wantd = {
-        (r["k"], r["id"]): r["rk"]
-        for r in dfd.select(
-            "k",
-            "id",
-            F.row_number()
-            .over(W.partitionBy("k").orderBy("v", "id"))
-            .cast("long")
-            .alias("rk"),
-        ).collect()
-    }
-    gotd = banded_rank(dfd, ["k"], "v", ["id"], bands=8, rank_col="rk")
-    assert {(r["k"], r["id"]): r["rk"] for r in gotd.collect()} == wantd
-
-    wantg = {
-        r["id"]: r["rk"]
-        for r in df.filter(F.col("k") == "a")
-        .select(
-            "id",
-            F.row_number()
-            .over(W.partitionBy().orderBy("v", "id"))
-            .cast("long")
-            .alias("rk"),
+    dfd = df.select("k", "id", (F.col("v") / 7.0).alias("v")).union(
+        spark.createDataFrame(
+            [("f", i, v) for i, v in enumerate([
+                1.5, float("nan"), None, -2.0, 1.5, float("inf"),
+                float("-inf"), 0.0, -0.0, float("nan"), 3.0,
+            ])],
+            "k string, id long, v double",
         )
-        .collect()
-    }
-    gotg = banded_rank(
-        df.filter(F.col("k") == "a"), [], "v", ["id"], bands=4, rank_col="rk"
     )
-    assert {r["id"]: r["rk"] for r in gotg.collect()} == wantg
+
+    def ranks(frame, keys):
+        return {
+            (r["k"], r["id"]): r["rk"]
+            for r in frame.select(
+                "k",
+                "id",
+                F.row_number()
+                .over(W.partitionBy(*keys).orderBy("v", "id"))
+                .cast("long")
+                .alias("rk"),
+            ).collect()
+        }
+
+    def got(frame):
+        return {(r["k"], r["id"]): r["rk"] for r in frame.collect()}
+
+    for frame in (df, dfd):
+        wanted = ranks(frame, ["k"])
+        for bands in (1, 2, 4, 64, 1000):
+            assert got(
+                banded_rank(frame, ["k"], "v", ["id"], bands=bands, rank_col="rk")
+            ) == wanted, bands
+        assert got(
+            _banded_rank_single_task(frame, ["k"], "v", ["id"], "rk")
+        ) == wanted
+
+    for frame in (df.filter(F.col("k") == "a"), dfd.filter(F.col("k") == "f")):
+        wantg = ranks(frame, [])
+        assert got(
+            banded_rank(frame, [], "v", ["id"], bands=4, rank_col="rk")
+        ) == wantg
+        assert got(_banded_rank_single_task(frame, [], "v", ["id"], "rk")) == wantg
 
 
 def test_bm25_multi_bit_identical_to_per_query_scores(spark):

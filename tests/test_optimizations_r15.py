@@ -225,7 +225,7 @@ def test_banded_rank_single_task_equals_ladder(spark):
 
 def test_banded_rank_hint_routes_and_respects_override(spark, monkeypatch):
     """A numeric-sort hint under the bound routes to the twin (single
-    mapInPandas plan, no window); FES_FORCE_DISTRIBUTED restores the
+    mapInArrow plan, no window); FES_FORCE_DISTRIBUTED restores the
     ladder. A non-numeric tiebreak must never route."""
     from flink_essentials_spark.functions import timeseries as ts
     from flink_essentials_spark.tables import load_tables
@@ -238,41 +238,73 @@ def test_banded_rank_hint_routes_and_respects_override(spark, monkeypatch):
         docs, ["source"], "n_chars", ["doc_id"], rank_col="rk",
         n_rows_hint=100,
     )
-    assert "MapInPandas" in fast._jdf.queryExecution().logical().toString()
+    assert "MapInArrow" in fast._jdf.queryExecution().logical().toString()
     monkeypatch.setenv("FES_FORCE_DISTRIBUTED", "1")
     slow = ts.banded_rank(
         docs, ["source"], "n_chars", ["doc_id"], rank_col="rk",
         n_rows_hint=100,
     )
-    assert "MapInPandas" not in slow._jdf.queryExecution().logical().toString()
+    assert "MapInArrow" not in slow._jdf.queryExecution().logical().toString()
     monkeypatch.delenv("FES_FORCE_DISTRIBUTED", raising=False)
     txt = docs.withColumn("sid", F.col("doc_id").cast("string"))
     nonnum = ts.banded_rank(
         txt, ["source"], "n_chars", ["sid"], rank_col="rk", n_rows_hint=100
     )
-    assert "MapInPandas" not in nonnum._jdf.queryExecution().logical().toString()
+    assert "MapInArrow" not in nonnum._jdf.queryExecution().logical().toString()
 
 
 def test_grouped_topk_equals_banded_rank_filter(spark):
-    """grouped_topk (one sort_array aggregate) must equal
-    banded_rank + filter(rk<=k) on a deterministic ordering."""
+    """grouped_topk (a bounded top-K: WindowGroupLimit with keys,
+    TakeOrderedAndProject without) must equal banded_rank +
+    filter(rk<=k), per key and global, with a null, a NaN and a tie in
+    the sort column — ascending, so nulls first and NaN last, ties
+    broken by doc_id."""
     from flink_essentials_spark.functions import timeseries as ts
     from flink_essentials_spark.tables import load_tables
 
     docs = load_tables(spark, SF_DIR)["documents"].select(
-        "source", "doc_id", "n_chars"
+        "source",
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_chars").cast("double").alias("v"),
     )
-    fast = _rows(
-        ts.grouped_topk(
-            docs, ["source"], "n_chars", ["doc_id"], k=7, rank_col="rk"
-        ).select("source", "n_chars", "doc_id", "rk")
+    edge = spark.createDataFrame(
+        [("edge", -1, None), ("edge", -2, float("nan")),
+         ("edge", -3, 7.0), ("edge", -4, 7.0)],
+        "source string, doc_id long, v double",
     )
-    slow = _rows(
-        ts.banded_rank(docs, ["source"], "n_chars", ["doc_id"], rank_col="rk")
-        .filter(F.col("rk") <= 7)
-        .select("source", "n_chars", "doc_id", "rk")
+    df = docs.unionByName(edge)
+
+    def rows(frame):
+        return {
+            (r["source"], r["doc_id"]): (repr(r["v"]), r["rk"])
+            for r in frame.collect()
+        }
+
+    order = [F.col("v").asc(), F.col("doc_id").asc()]
+    for frame, keys in ((df, ["source"]), (df, []), (edge, [])):
+        fast = rows(ts.grouped_topk(frame, keys, order, k=7, rank_col="rk"))
+        slow = rows(
+            ts.banded_rank(frame, keys, "v", ["doc_id"], rank_col="rk")
+            .filter(F.col("rk") <= 7)
+        )
+        assert fast == slow and len(fast) > 0, keys
+
+
+def test_grouped_topk_rejects_undirected_order_and_k_above_limit(spark):
+    """An order column without a stated direction, or a keyed k above
+    spark.sql.optimizer.windowGroupLimitThreshold (where Spark plans no
+    partial limit before the shuffle), raises ValueError."""
+    from flink_essentials_spark.functions import timeseries as ts
+
+    df = spark.range(10).select((F.col("id") % 2).alias("k"), "id")
+    with pytest.raises(ValueError, match="direction"):
+        ts.grouped_topk(df, ["k"], [F.col("id")], k=3)
+    limit = int(
+        spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold")
     )
-    assert fast == slow and len(fast) > 0
+    with pytest.raises(ValueError, match="windowGroupLimitThreshold"):
+        ts.grouped_topk(df, ["k"], [F.col("id").asc()], k=limit + 1)
+    assert ts.grouped_topk(df, [], [F.col("id").asc()], k=limit + 1).count() == 10
 
 
 def test_ecdf_cums_single_task_equals_ladder(spark):

@@ -297,10 +297,6 @@ def test_no_scale_killers_in_any_registry_plan(spark):
         # (corpus_mixture pattern); degrees/argmax/mutual-check are
         # equi-joins and struct-MAX aggregates
         "louvain_merge": {"BroadcastNestedLoopJoin"},
-        # banded GLOBAL rank (keys=[]) one-row bounds broadcast on the
-        # checkpointed pair model (the heaps_fit/chi2_terms pattern);
-        # the pair build itself is an equi-self-join on cust
-        "slope_one_devs": {"BroadcastNestedLoopJoin"},
         # one-row n_train aggregate broadcast-crossJoined onto the
         # one-row test-error aggregate (idle_customers pattern)
         "als_rmse": {"BroadcastNestedLoopJoin"},
@@ -381,10 +377,8 @@ def test_no_partitionless_window_over_unbounded_data(spark):
         # suffix max over the n_bands-row band aggregate (bounded by
         # construction; the data-sized windows are band-keyed)
         "pareto_suppliers",
-        # banded_rank(keys=[]) global rank: the flagged window is the
-        # band-offsets prefix sum riding the <= ~2*bands-row band-totals
-        # table (bounded by construction — the pareto_suppliers reason);
-        # every data-sized window is keyed by __br_band
+        # grouped_topk(keys=[]): the rank window rides the <= 20-row
+        # TakeOrderedAndProject output (bounded by k)
         "slope_one_devs",
     }
     offenders = {}
@@ -433,10 +427,18 @@ def test_no_lowcard_partition_window_over_unbanded_data(spark):
     # order-side names that mark the banded two-phase machinery: such
     # windows ride the bounded band/bucket-totals table, not the data
     band_order = re.compile(r"^(__)?(br_)?(band|bucket|tb|vb)#")
-    # empty after the r11 banding pass: every low-card-partition rank
-    # in the registry now goes through banded_rank / static band
-    # machinery; new entries need an audited bounded-input reason
-    allowed: set[str] = set()
+    # every other low-card-partition rank goes through banded_rank /
+    # static band machinery; new entries need an audited bounded-input
+    # reason
+    allowed = {
+        # grouped_topk top-k per key: a WindowGroupLimit Partial keeps
+        # <= k rows per key per input partition before the shuffle, so
+        # the window sees <= k x partitions rows per key (pinned by
+        # test_grouped_topk_plans_partial_limit_before_shuffle)
+        "topk_per_group",
+        "chi2_terms",
+        "rrf_fusion",
+    }
     offenders = {}
     for name in ALL_QUERIES:
         if name.startswith("streaming_") or name in allowed:
@@ -464,6 +466,26 @@ def test_no_lowcard_partition_window_over_unbanded_data(spark):
             ):
                 offenders.setdefault(name, []).append(m.group(1)[:90])
     assert not offenders, offenders
+
+
+def test_grouped_topk_plans_partial_limit_before_shuffle(spark):
+    """The low-card-window allowlist rows rank through grouped_topk:
+    each plan must carry a WindowGroupLimit Partial below its Exchange,
+    i.e. at most k rows per key per input partition reach the shuffle
+    (the bounded-state claim the allowlist reason rests on)."""
+    import re
+
+    for name in ("topk_per_group", "chi2_terms", "rrf_fusion"):
+        plan = plan_of(spark, name)
+        tree = plan.split("\n(1)")[0]
+        below = tree[tree.index("Exchange"):]
+        modes = [
+            re.search(
+                rf"\n\({i}\) WindowGroupLimit\n.*\nArguments: .*, (\w+)\n", plan
+            ).group(1)
+            for i in re.findall(r"WindowGroupLimit \((\d+)\)", below)
+        ]
+        assert "Partial" in modes, (name, tree)
 
 
 def test_ivf_cells_as_partition_column_prune(spark, tmp_path):
@@ -871,7 +893,7 @@ def test_distributed_form_exchange_budgets(spark, monkeypatch):
     budgets = {
         # (max_exchanges, max_joins)
         "chrf_pairs": (3, 2),
-        "slope_one_devs": (8, 3),
+        "slope_one_devs": (2, 1),
         "kmeans_pp": (4, 1),
         "mondrian_anon": (1, 0),
         "hdbscan_embed": (5, 2),

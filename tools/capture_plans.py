@@ -3,7 +3,8 @@
 Usage:
     python tools/capture_plans.py <tag> name1 [name2 ...]
 
-Writes plans/r14/<name>_<tag>.txt for each query (tag = before/after).
+Writes plans/<tag>/<name>.txt for each query (tag names the change and
+side, e.g. r16_before / r16_after).
 The query function is CALLED to build the DataFrame (some functions run
 driver-side setup jobs — bounds scans, replay-file writes — that is part
 of their real cost but does not affect the final plan dump). Streaming
@@ -22,8 +23,8 @@ from flink_essentials_spark.queries.catalog import ALL_QUERIES
 from flink_essentials_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
+PLANS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
 )
 
 
@@ -35,14 +36,15 @@ def main() -> None:
     unknown = [n for n in names if n not in ALL_QUERIES]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
-    os.makedirs(OUT_DIR, exist_ok=True)
+    out_dir = os.path.join(PLANS_DIR, tag)
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in names:
         df = ALL_QUERIES[name].fn(spark, SF_DIR)
         txt = df._jdf.queryExecution().explainString(mode)
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(txt)
         n_ex = txt.count("Exchange")

@@ -13,13 +13,14 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import re
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.pandas.types import to_arrow_schema  # noqa: E402
 
@@ -81,7 +82,15 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--only", nargs="*", default=None)
+    ap.add_argument(
+        "--distributed",
+        action="store_true",
+        help="set FES_FORCE_DISTRIBUTED=1: every twin-gated family runs "
+        "its distributed ladder",
+    )
     args = ap.parse_args()
+    if args.distributed:
+        os.environ["FES_FORCE_DISTRIBUTED"] = "1"
 
     spark = get_spark("correctness")
     con = duckdb.connect()
