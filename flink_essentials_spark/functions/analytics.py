@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from flink_essentials_spark.routing import single_task_ok
+from flink_essentials_spark.routing import single_task_map, single_task_ok
 
 # Distinct-item-cardinality cap for the dense I*I pair-count bincount
 # the single-task twins allocate: the row-count gate bounds ROWS, not
@@ -129,20 +129,12 @@ def _association_rules_single_task(
     items), run-length triu enumeration, bincounts. Pinned equal to
     the distributed member by test."""
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        bks, its = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            bks.append(pdf["bk"].to_numpy())
-            its.append(pdf["it"].to_numpy())
-        if not bks:
-            return
-        bk = np.concatenate(bks)
-        it = np.concatenate(its)
+        bk = pdf["bk"].to_numpy()
+        it = pdf["it"].to_numpy()
         ubk, bcode = np.unique(bk, return_inverse=True)
         uit, icode = np.unique(it, return_inverse=True)
         I = len(uit)
@@ -173,7 +165,7 @@ def _association_rules_single_task(
         nz = np.flatnonzero(n_ab * den >= num * n_b)
         nz = nz[n_ab[nz] > 0]
         if not len(nz):
-            return
+            return None
         a_i, b_i = nz // I, nz % I
         cnt = n_ab[nz]
         # both directed rules
@@ -196,19 +188,16 @@ def _association_rules_single_task(
         )
         if min_confidence > 0:
             out = out[out["confidence"] >= float(min_confidence)]
-        yield out
+        return out
 
     it_t = baskets.schema[item_col].dataType.simpleString()
-    return (
+    return single_task_map(
         baskets.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
-        )
-        .coalesce(1)
-        .mapInPandas(
-            work,
-            f"antecedent {it_t}, consequent {it_t}, n_pair long,"
-            " n_ante long, confidence double, lift double",
-        )
+        ),
+        work,
+        f"antecedent {it_t}, consequent {it_t}, n_pair long,"
+        " n_ante long, confidence double, lift double",
     )
 
 
@@ -428,20 +417,12 @@ def _greedy_coverage_single_task(
     in one Arrow pass over factorized item codes. Pinned equal by
     test."""
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        gs, its = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            gs.append(pdf["g"].to_numpy())
-            its.append(pdf["it"].to_numpy())
-        if not gs:
-            return
-        g = np.concatenate(gs)
-        it = np.concatenate(its)
+        g = pdf["g"].to_numpy()
+        it = pdf["it"].to_numpy()
         # the ROUTING hint is a proxy (callers pass the pre-explode
         # row count; the distinct (set, item) table here can be
         # larger) — bound the actual materialized size explicitly
@@ -482,13 +463,14 @@ def _greedy_coverage_single_task(
             covered[items[best_g]] = True
             total += best_gain
             rows.append((r, ug[best_g], best_gain, total))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             rows,
             columns=["rank", "set_id", "marginal_gain", "covered_total"],
         )
 
     set_t = sw.schema["g"].dataType.simpleString()
-    return sw.coalesce(1).mapInPandas(
+    return single_task_map(
+        sw,
         work,
         f"rank long, set_id {set_t}, marginal_gain long,"
         " covered_total long",
@@ -730,20 +712,12 @@ def _son_frequent_pairs_single_task(
     triu, one bincount — the association_rules twin's machinery) and
     apply the HAVING threshold. Pinned equal by test."""
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        bks, its = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            bks.append(pdf["bk"].to_numpy())
-            its.append(pdf["it"].to_numpy())
-        if not bks:
-            return
-        bk = np.concatenate(bks)
-        it = np.concatenate(its)
+        bk = pdf["bk"].to_numpy()
+        it = pdf["it"].to_numpy()
         _, bcode = np.unique(bk, return_inverse=True)
         uit, icode = np.unique(it, return_inverse=True)
         I = len(uit)
@@ -768,8 +742,8 @@ def _son_frequent_pairs_single_task(
         nz = np.flatnonzero(n_ab * den >= num * n_b)
         nz = nz[n_ab[nz] > 0]
         if not len(nz):
-            return
-        yield pd.DataFrame(
+            return None
+        return pd.DataFrame(
             {
                 "item_a": uit[nz // I],
                 "item_b": uit[nz % I],
@@ -779,15 +753,12 @@ def _son_frequent_pairs_single_task(
         )
 
     it_t = baskets.schema[item_col].dataType.simpleString()
-    return (
+    return single_task_map(
         baskets.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
-        )
-        .coalesce(1)
-        .mapInPandas(
-            work,
-            f"item_a {it_t}, item_b {it_t}, n_pair long, n_baskets long",
-        )
+        ),
+        work,
+        f"item_a {it_t}, item_b {it_t}, n_pair long, n_baskets long",
     )
 
 

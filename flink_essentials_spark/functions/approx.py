@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_essentials_spark.routing import single_task_map, single_task_ok
+
 
 def cardinality_stats(df: DataFrame, *cols: str, rsd: float = 0.05) -> DataFrame:
     return df.agg(
@@ -1040,26 +1042,24 @@ def _exact_quantiles_single_task(
     )
     qlist = [(int(a), int(b)) for a, b in qs]
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        parts = [p["__v"].to_numpy(np.int64) for p in batches if len(p)]
-        if not parts:
-            return
-        v = np.sort(np.concatenate(parts))
+        v = np.sort(pdf["__v"].to_numpy(np.int64))
         n = len(v)
         rows = [
             (a, b, n, int(v[(n * a + b - 1) // b - 1]))
             for a, b in qlist
         ]
-        yield pd.DataFrame(rows, columns=["q_num", "q_den", "n", "value"])
+        return pd.DataFrame(rows, columns=["q_num", "q_den", "n", "value"])
 
-    return (
-        df.select(F.col(value_col).cast("long").alias("__v"))
-        .filter(F.col("__v").isNotNull())
-        .coalesce(1)
-        .mapInPandas(work, schema)
+    return single_task_map(
+        df.select(F.col(value_col).cast("long").alias("__v")).filter(
+            F.col("__v").isNotNull()
+        ),
+        work,
+        schema,
     )
 
 
@@ -1101,8 +1101,6 @@ def exact_quantiles(
     bench SFs; r15); the multi-pass ladder below is the above-bound
     shape."""
     from pyspark.sql import types as T
-
-    from flink_essentials_spark.routing import single_task_ok
 
     if single_task_ok(n_rows_hint, 1 << 20):
         return _exact_quantiles_single_task(df, value_col, qs)
@@ -1654,7 +1652,7 @@ def _hll_pair_algebra_single_task(regs: DataFrame, p: int) -> DataFrame:
     alpha_mm = float(repr((0.7213 / (1.0 + 1.079 / m)) * m * m))
     lut = [float(v) for v in _lc_lut(p)]
 
-    def algebra(batches):
+    def algebra(pdf):
         from decimal import ROUND_HALF_UP, Decimal
 
         import pandas as pd
@@ -1669,12 +1667,11 @@ def _hll_pair_algebra_single_task(regs: DataFrame, p: int) -> DataFrame:
             )
 
         by_g: dict[str, dict[int, int]] = {}
-        for pdf in batches:
-            for g, b, r in zip(pdf["g"], pdf["bucket"], pdf["rho"]):
-                d = by_g.setdefault(g, {})
-                b, r = int(b), int(r)
-                if r > d.get(b, -1):
-                    d[b] = r
+        for g, b, r in zip(pdf["g"], pdf["bucket"], pdf["rho"]):
+            d = by_g.setdefault(g, {})
+            b, r = int(b), int(r)
+            if r > d.get(b, -1):
+                d[b] = r
 
         def est(d: dict[int, int]) -> float:
             n_set = len(d)
@@ -1704,21 +1701,21 @@ def _hll_pair_algebra_single_task(regs: DataFrame, p: int) -> DataFrame:
                 out.append(
                     (a, b, e1[a], e1[b], eu, inter, rnd(inter / eu, 6))
                 )
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "a",
-                    "b",
-                    "est_a",
-                    "est_b",
-                    "est_union",
-                    "est_inter",
-                    "est_jaccard",
-                ],
-            )
+        return pd.DataFrame(
+            out,
+            columns=[
+                "a",
+                "b",
+                "est_a",
+                "est_b",
+                "est_union",
+                "est_inter",
+                "est_jaccard",
+            ],
+        )
 
-    return regs.coalesce(1).mapInPandas(
+    return single_task_map(
+        regs,
         algebra,
         "a string, b string, est_a double, est_b double, "
         "est_union double, est_inter double, est_jaccard double",
@@ -1755,8 +1752,6 @@ def hll_pair_algebra(
     (pinned equal by test)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType
-
-    from flink_essentials_spark.routing import single_task_ok
 
     if (
         single_task_bound > 0

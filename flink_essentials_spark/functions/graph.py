@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_essentials_spark.routing import single_task_ok
+from flink_essentials_spark.routing import single_task_map, single_task_ok
 
 
 # Edge bound for the direct single-task union-find route in
@@ -72,7 +72,7 @@ def _cc_single_task_uf(e: DataFrame) -> DataFrame:
         [T.StructField("node", node_t), T.StructField("cluster_id", node_t)]
     )
 
-    def _uf(batches):
+    def _uf(pdf):
         import pandas as pd
 
         parent: dict = {}
@@ -85,21 +85,17 @@ def _cc_single_task_uf(e: DataFrame) -> DataFrame:
                 parent[x], x = r, parent[x]
             return r
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
         for u, v in zip(pdf["a"], pdf["b"]):
             ru, rv = find(u), find(v)
             if ru != rv:
                 lo, hi = (ru, rv) if ru < rv else (rv, ru)
                 parent[hi] = lo
         nodes = sorted(set(pdf["a"]).union(pdf["b"]))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {"node": nodes, "cluster_id": [find(x) for x in nodes]}
         )
 
-    return e.coalesce(1).mapInPandas(_uf, out_schema)
+    return single_task_map(e, _uf, out_schema)
 
 
 def connected_components(
@@ -283,48 +279,15 @@ def _cc_hybrid(edges, src, dst, max_iter, stats, uf_bound: int = 4_000_000):
     if n_edges > uf_bound:
         if stats is not None:
             stats["hybrid"] = "two-phase"
-        roots = _cc_two_phase(re_, "a", "b", max_iter, stats).select(
-            F.col("node").alias("rep"), F.col("cluster_id").alias("root")
-        )
+        roots = _cc_two_phase(re_, "a", "b", max_iter, stats)
     else:
         if stats is not None:
             stats["hybrid"] = "union-find"
             stats["rounds"] = 1
-        node_t = e.schema["a"].dataType
-        from pyspark.sql import types as T
-
-        out_schema = T.StructType(
-            [T.StructField("rep", node_t), T.StructField("root", node_t)]
-        )
-
-        def _uf(batches):
-            import pandas as pd
-
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            parts = [p for p in batches]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for u, v in zip(pdf["a"], pdf["b"]):
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                    parent[hi] = lo
-            nodes = sorted(set(pdf["a"]).union(pdf["b"]))
-            yield pd.DataFrame(
-                {"rep": nodes, "root": [find(x) for x in nodes]}
-            )
-
-        roots = re_.repartition(1).mapInPandas(_uf, out_schema)
+        roots = _cc_single_task_uf(re_)
+    roots = roots.select(
+        F.col("node").alias("rep"), F.col("cluster_id").alias("root")
+    )
     # blobs fully collapsed by contraction have no representative edge
     # and resolve through the coalesce (their rep IS the component min)
     return m.join(roots, "rep", "left").select(
@@ -496,26 +459,17 @@ def _pagerank_single_task(
     d = float(damping)
     is_str = isinstance(edges.schema[src].dataType, StringType)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        ss, ds, ws = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if is_str:
-                ss.append(pdf["src"].to_numpy())
-                ds.append(pdf["dst"].to_numpy())
-            else:
-                ss.append(pdf["src"].to_numpy(np.int64))
-                ds.append(pdf["dst"].to_numpy(np.int64))
-            ws.append(pdf["w"].to_numpy(np.float64))
-        if not ss:
-            return
-        s = np.concatenate(ss)
-        t = np.concatenate(ds)
-        w = np.concatenate(ws)
+        if is_str:
+            s = pdf["src"].to_numpy()
+            t = pdf["dst"].to_numpy()
+        else:
+            s = pdf["src"].to_numpy(np.int64)
+            t = pdf["dst"].to_numpy(np.int64)
+        w = pdf["w"].to_numpy(np.float64)
         if symmetrize:
             s, t = np.r_[s, t], np.r_[t, s]
             w = np.r_[w, w]
@@ -535,7 +489,7 @@ def _pagerank_single_task(
                 minlength=n,
             )
             r = (1.0 - d) + d * c
-        yield pd.DataFrame({"node": nodes, "rank": r})
+        return pd.DataFrame({"node": nodes, "rank": r})
 
     w = (F.col(weight_col) if weight_col else F.lit(1)).cast("double")
     node_cast = (lambda c: c) if is_str else (lambda c: c.cast("long"))
@@ -544,8 +498,8 @@ def _pagerank_single_task(
         node_cast(F.col(dst)).alias("dst"),
         w.alias("w"),
     )
-    return e.coalesce(1).mapInPandas(
-        work, f"node {'string' if is_str else 'long'}, rank double"
+    return single_task_map(
+        e, work, f"node {'string' if is_str else 'long'}, rank double"
     )
 
 
@@ -685,22 +639,13 @@ def _personalized_pagerank_single_task(
     d = float(damping)
     seed_list = [int(s) for s in seeds]
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        srcs, dsts, ws = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            srcs.append(pdf["src"].to_numpy(np.int64))
-            dsts.append(pdf["dst"].to_numpy(np.int64))
-            ws.append(pdf["w"].to_numpy(np.float64))
-        if not srcs:
-            return
-        es = np.concatenate(srcs)
-        ed = np.concatenate(dsts)
-        ew = np.concatenate(ws)
+        es = pdf["src"].to_numpy(np.int64)
+        ed = pdf["dst"].to_numpy(np.int64)
+        ew = pdf["w"].to_numpy(np.float64)
         if symmetrize:
             es, ed = np.r_[es, ed], np.r_[ed, es]
             ew = np.r_[ew, ew]
@@ -744,11 +689,9 @@ def _personalized_pagerank_single_task(
                 )
             )
         if out:
-            yield pd.concat(out, ignore_index=True)
+            return pd.concat(out, ignore_index=True)
 
-    return e.coalesce(1).mapInPandas(
-        work, "seed long, node long, rank double"
-    )
+    return single_task_map(e, work, "seed long, node long, rank double")
 
 
 def personalized_pagerank(
@@ -849,20 +792,12 @@ def _hits_single_task(
     Pinned equal by test."""
     it = int(iterations)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        ss, ds = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ss.append(pdf["src"].to_numpy(np.int64))
-            ds.append(pdf["dst"].to_numpy(np.int64))
-        if not ss:
-            return
-        s = np.concatenate(ss)
-        t = np.concatenate(ds)
+        s = pdf["src"].to_numpy(np.int64)
+        t = pdf["dst"].to_numpy(np.int64)
         nodes = np.unique(np.r_[s, t])
         n = len(nodes)
         si = np.searchsorted(nodes, s)
@@ -888,15 +823,13 @@ def _hits_single_task(
             np.add.at(a, ti, h[si])
             h = np.zeros(n, dtype=np.int64)
             np.add.at(h, si, a[ti])
-        yield pd.DataFrame({"node": nodes, "hub": h, "authority": a})
+        return pd.DataFrame({"node": nodes, "hub": h, "authority": a})
 
     e = edges.select(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     )
-    return e.coalesce(1).mapInPandas(
-        work, "node long, hub long, authority long"
-    )
+    return single_task_map(e, work, "node long, hub long, authority long")
 
 
 def hits(
@@ -1030,22 +963,13 @@ def _label_propagation_single_task(
         F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
     )
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        srcs, dsts, ws = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            srcs.append(pdf["src"].to_numpy(np.int64))
-            dsts.append(pdf["dst"].to_numpy(np.int64))
-            ws.append(pdf["w"].to_numpy(np.int64))
-        if not srcs:
-            return
-        es = np.concatenate(srcs)
-        ed = np.concatenate(dsts)
-        ew = np.concatenate(ws).astype(np.float64)
+        es = pdf["src"].to_numpy(np.int64)
+        ed = pdf["dst"].to_numpy(np.int64)
+        ew = pdf["w"].to_numpy(np.int64).astype(np.float64)
         # factorize BEFORE symmetrizing (half the unique/searchsorted
         # work; the symmetric index pair is the same arrays swapped)
         nodes = np.union1d(np.unique(es), np.unique(ed))
@@ -1108,11 +1032,9 @@ def _label_propagation_single_task(
             lab[kd[first]] = kl[first]
             labeled[kd[first]] = True
         out = np.flatnonzero(labeled)
-        yield pd.DataFrame(
-            {"node": nodes[out], "label": nodes[lab[out]]}
-        )
+        return pd.DataFrame({"node": nodes[out], "label": nodes[lab[out]]})
 
-    return e.coalesce(1).mapInPandas(work, "node long, label long")
+    return single_task_map(e, work, "node long, label long")
 
 
 def label_propagation(
@@ -1224,22 +1146,13 @@ def _dbscan_2d_single_task(
     test."""
     e2, ms = int(eps) * int(eps), int(min_samples)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        ps, xs, ys = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ps.append(pdf["pid"].to_numpy(np.int64))
-            xs.append(pdf["x"].to_numpy(np.int64))
-            ys.append(pdf["y"].to_numpy(np.int64))
-        if not ps:
-            return
-        pid = np.concatenate(ps)
-        x = np.concatenate(xs)
-        y = np.concatenate(ys)
+        pid = pdf["pid"].to_numpy(np.int64)
+        x = pdf["x"].to_numpy(np.int64)
+        y = pdf["y"].to_numpy(np.int64)
         n = len(pid)
         N = np.zeros((n, n), dtype=bool)
         for s in range(0, n, 1024):
@@ -1280,7 +1193,7 @@ def _dbscan_2d_single_task(
                 hit = bm < big
                 cluster[nc[hit]] = bm[hit]
                 role[nc[hit]] = "border"
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "pid": pid,
                 "x": x,
@@ -1290,8 +1203,8 @@ def _dbscan_2d_single_task(
             }
         )
 
-    return f.coalesce(1).mapInPandas(
-        work, "pid long, x long, y long, role string, cluster_id long"
+    return single_task_map(
+        f, work, "pid long, x long, y long, role string, cluster_id long"
     )
 
 
@@ -1821,6 +1734,40 @@ def hdbscan_mr_edges_2d(
     return mr_edges_from_pairs(pairs, core)
 
 
+def _kruskal_forest(ea, eb, w):
+    """Kruskal over int64 edge arrays (a, b, w) under the lexicographic
+    (w, a, b) total order — the forest is unique, so it equals the
+    distributed Borůvka forest edge for edge. Min-root union-find makes
+    every root its component's min node id, which is ``comp``. Returns
+    the accepted edges as an (a, b, w, comp) frame in Kruskal order."""
+    import numpy as np
+    import pandas as pd
+
+    order = np.lexsort((eb, ea, w))
+    ea, eb, w = ea[order], eb[order], w[order]
+    parent: dict = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        r = v
+        while parent[r] != r:
+            r = parent[r]
+        while parent[v] != r:
+            parent[v], v = r, parent[v]
+        return r
+
+    acc = np.zeros(len(ea), dtype=bool)
+    for i in range(len(ea)):
+        ra, rb = find(int(ea[i])), find(int(eb[i]))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+            acc[i] = True
+    comp = np.array([find(int(a)) for a in ea[acc]], dtype=np.int64)
+    return pd.DataFrame(
+        {"a": ea[acc], "b": eb[acc], "w": w[acc], "comp": comp}
+    )
+
+
 def hdbscan_mst_2d_single_task(
     points: DataFrame,
     id_col: str,
@@ -1840,22 +1787,12 @@ def hdbscan_mst_2d_single_task(
     boruvka_mst: (a, b, w, comp), all BIGINT."""
     e2, kk = int(eps) * int(eps), int(k)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
-        import pandas as pd
 
-        ps, xs, ys = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ps.append(pdf["pid"].to_numpy(np.int64))
-            xs.append(pdf["x"].to_numpy(np.int64))
-            ys.append(pdf["y"].to_numpy(np.int64))
-        if not ps:
-            return
-        pid = np.concatenate(ps)
-        x = np.concatenate(xs)
-        y = np.concatenate(ys)
+        pid = pdf["pid"].to_numpy(np.int64)
+        x = pdf["x"].to_numpy(np.int64)
+        y = pdf["y"].to_numpy(np.int64)
         n = len(pid)
         big = np.int64(1) << 62
         d2 = np.empty((n, n), dtype=np.int64)
@@ -1870,7 +1807,7 @@ def hdbscan_mst_2d_single_task(
         is_core = deg >= kk - 1
         ci = np.flatnonzero(is_core)
         if not len(ci):
-            return
+            return None
         # core2 = (k-1)-th smallest eps-neighbor distance (1-based)
         nd = np.where(nb[ci], d2[ci], big)
         nd.sort(axis=1)
@@ -1885,42 +1822,14 @@ def hdbscan_mst_2d_single_task(
         w = np.maximum(
             np.maximum(core2[ri], core2[cj]), d2[ci[ri], ci[cj]]
         )
-        order = np.lexsort((eb, ea, w))
-        ea, eb, w = ea[order], eb[order], w[order]
-        parent: dict = {}
-
-        def find(v):
-            parent.setdefault(v, v)
-            r = v
-            while parent[r] != r:
-                r = parent[r]
-            while parent[v] != r:
-                parent[v], v = r, parent[v]
-            return r
-
-        acc = np.zeros(len(ea), dtype=bool)
-        for i in range(len(ea)):
-            ra, rb = find(int(ea[i])), find(int(eb[i]))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-                acc[i] = True
-        # comp = min node id per final component (roots are min ids
-        # by the min-union rule above)
-        comp = np.array(
-            [find(int(a)) for a in ea[acc]], dtype=np.int64
-        )
-        yield pd.DataFrame(
-            {"a": ea[acc], "b": eb[acc], "w": w[acc], "comp": comp}
-        )
+        return _kruskal_forest(ea, eb, w)
 
     f = points.select(
         F.col(id_col).alias("pid"),
         F.col(x_col).cast("long").alias("x"),
         F.col(y_col).cast("long").alias("y"),
     )
-    return f.coalesce(1).mapInPandas(
-        work, "a long, b long, w long, comp long"
-    )
+    return single_task_map(f, work, "a long, b long, w long, comp long")
 
 
 def mr_edges_from_pairs(pairs: DataFrame, core: DataFrame) -> DataFrame:
@@ -1957,22 +1866,12 @@ def hdbscan_mst_from_canon_single_task(
     one Arrow pass. Pinned equal by test."""
     kk = int(k)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
-        import pandas as pd
 
-        a_l, b_l, d_l = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a_l.append(pdf["vec_a"].to_numpy(np.int64))
-            b_l.append(pdf["vec_b"].to_numpy(np.int64))
-            d_l.append(pdf["d2"].to_numpy(np.int64))
-        if not a_l:
-            return
-        ea0 = np.concatenate(a_l)
-        eb0 = np.concatenate(b_l)
-        d2 = np.concatenate(d_l)
+        ea0 = pdf["vec_a"].to_numpy(np.int64)
+        eb0 = pdf["vec_b"].to_numpy(np.int64)
+        d2 = pdf["d2"].to_numpy(np.int64)
         nodes = np.unique(np.r_[ea0, eb0])
         n = len(nodes)
         ai = np.searchsorted(nodes, ea0)
@@ -1994,34 +1893,12 @@ def hdbscan_mst_from_canon_single_task(
         w = np.maximum(
             np.maximum(core2[ai[keep]], core2[bi[keep]]), d2[keep]
         )
-        order = np.lexsort((eb, ea, w))
-        ea, eb, w = ea[order], eb[order], w[order]
-        parent: dict = {}
+        return _kruskal_forest(ea, eb, w)
 
-        def find(v):
-            parent.setdefault(v, v)
-            r = v
-            while parent[r] != r:
-                r = parent[r]
-            while parent[v] != r:
-                parent[v], v = r, parent[v]
-            return r
-
-        acc = np.zeros(len(ea), dtype=bool)
-        for i in range(len(ea)):
-            ra, rb = find(int(ea[i])), find(int(eb[i]))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-                acc[i] = True
-        comp = np.array(
-            [find(int(x)) for x in ea[acc]], dtype=np.int64
-        )
-        yield pd.DataFrame(
-            {"a": ea[acc], "b": eb[acc], "w": w[acc], "comp": comp}
-        )
-
-    return canon.select("vec_a", "vec_b", "d2").coalesce(1).mapInPandas(
-        work, "a long, b long, w long, comp long"
+    return single_task_map(
+        canon.select("vec_a", "vec_b", "d2"),
+        work,
+        "a long, b long, w long, comp long",
     )
 
 
@@ -2261,21 +2138,18 @@ def _kruskal_finish(ce: DataFrame) -> DataFrame:
     forest edges (x1, x2, x3 = ew, ea, eb); kind 1 rows map old
     component label x1 → final root x2."""
 
-    def kr(batches):
+    def kr(pdf):
         import pandas as pd
 
-        rows = []
-        for pdf in batches:
-            rows.extend(
-                zip(
-                    (int(v) for v in pdf["ew"]),
-                    (int(v) for v in pdf["ea"]),
-                    (int(v) for v in pdf["eb"]),
-                    (int(v) for v in pdf["ca"]),
-                    (int(v) for v in pdf["cb"]),
-                )
+        rows = sorted(
+            zip(
+                (int(v) for v in pdf["ew"]),
+                (int(v) for v in pdf["ea"]),
+                (int(v) for v in pdf["eb"]),
+                (int(v) for v in pdf["ca"]),
+                (int(v) for v in pdf["cb"]),
             )
-        rows.sort()
+        )
         parent: dict = {}
 
         def find(x):
@@ -2294,9 +2168,9 @@ def _kruskal_finish(ce: DataFrame) -> DataFrame:
                 parent[max(ra, rb)] = min(ra, rb)
                 out.append((0, ew, ea, eb))
         out.extend((1, c, find(c), 0) for c in list(parent))
-        yield pd.DataFrame(out, columns=["kind", "x1", "x2", "x3"])
+        return pd.DataFrame(out, columns=["kind", "x1", "x2", "x3"])
 
-    return ce.coalesce(1).mapInPandas(kr, "kind int, x1 long, x2 long, x3 long")
+    return single_task_map(ce, kr, "kind int, x1 long, x2 long, x3 long")
 
 
 def boruvka_mst(

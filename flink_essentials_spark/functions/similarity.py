@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from flink_essentials_spark.routing import single_task_ok
+from flink_essentials_spark.routing import single_task_map, single_task_ok
 
 # Deterministic pseudo-random hyperplanes: component j of plane p is
 # derived from a fixed integer hash — reproducible anywhere, no RNG.
@@ -1511,7 +1511,7 @@ def _knn_hubness_single_task(
     moment/skewness expression tree. Pinned equal by test."""
     lv = int(levels)
 
-    def work(batches):
+    def work(pdf):
         import hashlib
 
         import math
@@ -1519,16 +1519,8 @@ def _knn_hubness_single_task(
         import numpy as np
         import pandas as pd
 
-        ids_l, v_l = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_l.append(pdf["__id"].to_numpy(np.int64))
-            v_l.append(np.array(pdf["__v"].tolist(), dtype=np.float64))
-        if not ids_l:
-            return
-        ids = np.concatenate(ids_l)
-        v = np.vstack(v_l)
+        ids = pdf["__id"].to_numpy(np.int64)
+        v = np.array(pdf["__v"].tolist(), dtype=np.float64)
         assert ids.max(initial=0) < (1 << 21), "knn_hubness: ids >= 2^21"
         lo = v.min(axis=0)
         hi = v.max(axis=0)
@@ -1547,7 +1539,7 @@ def _knn_hubness_single_task(
             ids, q = ids[keep], q[keep]
         n = len(ids)
         if not n:
-            return
+            return None
         take = min(kk, n - 1)
         nk = np.zeros(n, dtype=np.int64)
         ch = 2048
@@ -1569,7 +1561,7 @@ def _knn_hubness_single_task(
         m2 = float(sxx) / nd - mu * mu
         m3 = float(sxxx) / nd - 3.0 * mu * (float(sxx) / nd) + 2.0 * mu * mu * mu
         skew = m3 / (m2 * math.sqrt(m2))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "n_vecs": [np.int64(n)],
                 "k": [np.int64(kk)],
@@ -1583,8 +1575,8 @@ def _knn_hubness_single_task(
         F.col(id_col).cast("long").alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     )
-    return e.coalesce(1).mapInPandas(
-        work, "n_vecs long, k long, max_nk long, n_zero long, skew double"
+    return single_task_map(
+        e, work, "n_vecs long, k long, max_nk long, n_zero long, skew double"
     )
 
 
@@ -2032,24 +2024,16 @@ def _euclid_eps_pairs_single_task(
     Pinned equal to the distributed member by test."""
     lim, sc = int(eps2), float(scale)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        ids_l, q_l = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_l.append(pdf["__id"].to_numpy(np.int64))
-            q_l.append(
-                np.floor(
-                    np.array(pdf["__v"].tolist(), dtype=np.float64) * sc
-                ).astype(np.int64)
-            )
-        if not ids_l:
-            return
-        ids = np.concatenate(ids_l)
-        qf = np.vstack(q_l).astype(np.float64)
+        ids = pdf["__id"].to_numpy(np.int64)
+        qf = (
+            np.floor(np.array(pdf["__v"].tolist(), dtype=np.float64) * sc)
+            .astype(np.int64)
+            .astype(np.float64)
+        )
         n2 = (qf * qf).sum(axis=1)
         out_a, out_b, out_d = [], [], []
         ch = 2048
@@ -2064,7 +2048,7 @@ def _euclid_eps_pairs_single_task(
                 out_b.append(ids[bi])
                 out_d.append(d2[ai, bi].astype(np.int64))
         if out_a:
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "vec_a": np.concatenate(out_a),
                     "vec_b": np.concatenate(out_b),
@@ -2072,13 +2056,13 @@ def _euclid_eps_pairs_single_task(
                 }
             )
 
-    return (
+    return single_task_map(
         df.select(
             F.col(id_col).cast("long").alias("__id"),
             F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .coalesce(1)
-        .mapInPandas(work, "vec_a long, vec_b long, d2 long")
+        ),
+        work,
+        "vec_a long, vec_b long, d2 long",
     )
 
 
@@ -2136,26 +2120,18 @@ def _simhash_eps_pairs_single_task(
     S = simhash_signs(num_tables, bits, dim, seed)
     T, L, sc, lim = int(num_tables), int(bits), float(scale), int(eps2)
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        ids_l, q_l = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if x.shape[1] != S.shape[1]:
-                raise ValueError(
-                    f"simhash_eps_pairs: dim={S.shape[1]} but vectors "
-                    f"have {x.shape[1]} components"
-                )
-            ids_l.append(pdf[id_col].to_numpy(np.int64))
-            q_l.append(np.floor(x * sc).astype(np.int64))
-        if not ids_l:
-            return
-        ids = np.concatenate(ids_l)
-        q = np.vstack(q_l)
+        x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        if x.shape[1] != S.shape[1]:
+            raise ValueError(
+                f"simhash_eps_pairs: dim={S.shape[1]} but vectors "
+                f"have {x.shape[1]} components"
+            )
+        ids = pdf[id_col].to_numpy(np.int64)
+        q = np.floor(x * sc).astype(np.int64)
         n = len(q)
         proj = q.astype(np.float64) @ S.T.astype(np.float64)
         # pack sign bits via a float64 dot with power-of-two weights:
@@ -2185,7 +2161,7 @@ def _simhash_eps_pairs_single_task(
                 out_b.append(ids[ci])
                 out_d.append(d2[ri, ci].astype(np.int64))
         if out_a:
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "vec_a": np.concatenate(out_a),
                     "vec_b": np.concatenate(out_b),
@@ -2193,10 +2169,8 @@ def _simhash_eps_pairs_single_task(
                 }
             )
 
-    return (
-        df.select(id_col, vec_col)
-        .coalesce(1)
-        .mapInPandas(work, "vec_a long, vec_b long, d2 long")
+    return single_task_map(
+        df.select(id_col, vec_col), work, "vec_a long, vec_b long, d2 long"
     )
 
 
@@ -2475,30 +2449,17 @@ def _kmeans_pp_single_task(
     the multi-job path (pinned by test and the unchanged oracle)."""
     sc = float(scale)
 
-    def work(batches):
+    def work(pdf):
         import hashlib
         import math
 
         import numpy as np
         import pandas as pd
 
-        ids_l, q_l = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_l.append(pdf[id_col].to_numpy(np.int64))
-            q_l.append(
-                np.floor(
-                    np.array(pdf[vec_col].tolist(), dtype=np.float64) * sc
-                ).astype(np.int64)
-            )
-        if not ids_l:
-            raise ValueError(
-                "kmeanspp_seeds: corpus exhausted at round 0 (< "
-                f"{k} distinct vectors)"
-            )
-        ids = np.concatenate(ids_l)
-        q = np.vstack(q_l)
+        ids = pdf[id_col].to_numpy(np.int64)
+        q = np.floor(
+            np.array(pdf[vec_col].tolist(), dtype=np.float64) * sc
+        ).astype(np.int64)
         if dim_hint is not None and q.shape[1] != dim_hint:
             raise ValueError(
                 f"kmeans_pp_stats: dim_hint={dim_hint} but vectors "
@@ -2599,12 +2560,13 @@ def _kmeans_pp_single_task(
                         float(S_f[j, d]) / float(N_f[j]),
                     )
                 )
-        yield pd.DataFrame(
+        return pd.DataFrame(
             out,
             columns=["cluster", "seed_id", "dim", "n", "s", "c_new"],
         )
 
-    return corpus.select(id_col, vec_col).coalesce(1).mapInPandas(
+    return single_task_map(
+        corpus.select(id_col, vec_col),
         work,
         "cluster long, seed_id int, dim int, n long, s long, c_new double",
     )

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_essentials_spark.routing import single_task_map, single_task_ok
+
 
 def ewma_control(
     df: DataFrame,
@@ -272,11 +274,7 @@ def _ecdf_cums_single_task(
         ]
     )
 
-    def work(batches):
-        frames = [p for p in batches if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
+    def work(pdf):
         outs = []
         for k, grp in pdf.groupby("__k", sort=False, dropna=False):
             v = grp["__v"].to_numpy(np.int64)
@@ -322,9 +320,27 @@ def _ecdf_cums_single_task(
                     }
                 )
             )
-        yield pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True)
 
-    return staged.coalesce(1).mapInPandas(work, schema)
+    return single_task_map(staged, work, schema)
+
+
+def _broadcast_join_null_safe(
+    df: DataFrame, small: DataFrame, keys: list[str]
+) -> DataFrame:
+    """``df`` joined to ``broadcast(small)`` on ``keys`` by null-safe
+    equality (<=>), so a null key meets its own group as groupBy and
+    the twins keep it; no keys is a cross join. Spark plans <=> as an
+    equi-join key, so this stays a broadcast hash join. Keeps df's
+    columns, then small's non-key columns."""
+    if not keys:
+        return df.crossJoin(F.broadcast(small))
+    alias = {c: f"__nsj_{c}" for c in keys}
+    right = small.select(
+        *[F.col(c).alias(alias.get(c, c)) for c in small.columns]
+    )
+    cond = [F.col(c).eqNullSafe(F.col(a)) for c, a in alias.items()]
+    return df.join(F.broadcast(right), cond).drop(*alias.values())
 
 
 def _ecdf_cums(
@@ -345,8 +361,6 @@ def _ecdf_cums(
     the bounded single-task twin (r15: the banded ladder's ~12-14
     serialized jobs dominate the ks/mann-whitney/stump family at
     bench SFs); the ladder below is the above-bound shape."""
-    from flink_essentials_spark.routing import single_task_ok
-
     if single_task_ok(n_rows_hint, BANDED_RANK_SINGLE_TASK_ROWS):
         return _ecdf_cums_single_task(
             df, key_col, split_col, value_col, bands
@@ -384,7 +398,7 @@ def _ecdf_cums(
         F.sum("__ca").alias("__na"),
         F.sum("__cb").alias("__nb"),
     )
-    banded = g.join(F.broadcast(bounds), "__k").withColumn(
+    banded = _broadcast_join_null_safe(g, bounds, ["__k"]).withColumn(
         "__band",
         F.expr(
             f"CASE WHEN (__hi - __lo + 1) >= {int(bands)} "
@@ -412,7 +426,7 @@ def _ecdf_cums(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cum = (
-        banded.join(F.broadcast(offsets), ["__k", "__band"])
+        _broadcast_join_null_safe(banded, offsets, ["__k", "__band"])
         .withColumn("__cuma", F.col("__oa") + F.sum("__ca").over(w_in))
         .withColumn("__cumb", F.col("__ob") + F.sum("__cb").over(w_in))
     )
@@ -583,8 +597,6 @@ def banded_rank(
     shape (r15)."""
     from pyspark.sql.types import NumericType
 
-    from flink_essentials_spark.routing import single_task_ok
-
     if single_task_ok(n_rows_hint, BANDED_RANK_SINGLE_TASK_ROWS) and all(
         isinstance(df.schema[c].dataType, NumericType)
         for c in [value_col, *tiebreak_cols]
@@ -602,11 +614,7 @@ def banded_rank(
     # empty key list = one global rank (still banded: the only
     # unbounded-input window is keyed by band; the offsets window rides
     # the tiny band-totals table)
-    j = (
-        df.join(F.broadcast(bounds), kc)
-        if kc
-        else df.crossJoin(F.broadcast(bounds))
-    )
+    j = _broadcast_join_null_safe(df, bounds, kc)
     lo, hi = F.col("__br_lo"), F.col("__br_hi")
     # halved operands never overflow; the ratio is in [0, 1], or NaN
     # when a bound is infinite — least() sends NaN to the last band
@@ -639,7 +647,7 @@ def banded_rank(
         v, *[F.col(c) for c in tiebreak_cols]
     )
     return (
-        banded.join(F.broadcast(offs), kc + ["__br_band"])
+        _broadcast_join_null_safe(banded, offs, kc + ["__br_band"])
         .withColumn(
             rank_col,
             (F.col("__br_off") + F.row_number().over(w_in)).cast("long"),
@@ -681,11 +689,7 @@ def _spearman_rho_single_task(
         F.col(value_col).cast("long").alias("__v"),
     )
 
-    def work(batches):
-        frames = [p for p in batches if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
+    def work(pdf):
         out = {
             "k": [], "n": [], "num": [], "denx": [], "deny": [], "rho": []
         }
@@ -720,9 +724,10 @@ def _spearman_rho_single_task(
             out["denx"].append(denx)
             out["deny"].append(deny)
             out["rho"].append(num / np.sqrt(denx * deny))
-        yield pd.DataFrame(out)
+        return pd.DataFrame(out)
 
-    return staged.coalesce(1).mapInPandas(
+    return single_task_map(
+        staged,
         work,
         f"k {ktype}, n long, num double, denx double, deny double, "
         "rho double",
@@ -755,8 +760,6 @@ def spearman_rho(
     rho). ``n_rows_hint`` (footer-derived) under
     ``RANKCORR_SINGLE_TASK_ROWS`` routes to the bounded single-task
     twin (r15); the banded ladder below is the above-bound shape."""
-    from flink_essentials_spark.routing import single_task_ok
-
     if single_task_ok(n_rows_hint, RANKCORR_SINGLE_TASK_ROWS):
         return _spearman_rho_single_task(df, key_col, order_cols, value_col)
     staged = df.select(
@@ -1076,11 +1079,7 @@ def _kendall_tau_single_task(
         F.col(value_col).cast("long").alias("__v"),
     )
 
-    def work(batches):
-        frames = [p for p in batches if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
+    def work(pdf):
         out = {
             "k": [], "n": [], "n0": [], "t2": [], "d": [], "s": [],
             "tau_b": [],
@@ -1110,9 +1109,10 @@ def _kendall_tau_single_task(
         # object dtype keeps None a SQL NULL (NaN would survive as a
         # non-null double and diverge from the F.when(...) tail)
         f["tau_b"] = f["tau_b"].astype(object)
-        yield f
+        return f
 
-    return staged.coalesce(1).mapInPandas(
+    return single_task_map(
+        staged,
         work,
         f"k {ktype}, n long, n0 long, t2 long, d long, s long, "
         "tau_b double",
@@ -1159,8 +1159,6 @@ def kendall_tau(
     twin (r15); the banded ladder below is the above-bound shape."""
     import numpy as np
     import pandas as pd
-
-    from flink_essentials_spark.routing import single_task_ok
 
     if single_task_ok(n_rows_hint, RANKCORR_SINGLE_TASK_ROWS):
         return _kendall_tau_single_task(df, key_col, order_cols, value_col)

@@ -20,7 +20,7 @@ from flink_essentials_spark.tables import (
     parquet_rows,
     table_rows,
 )
-from flink_essentials_spark.routing import single_task_ok
+from flink_essentials_spark.routing import single_task_map, single_task_ok
 
 # SQL building blocks shared by oracles
 _SQL_TOKENS = r"list_filter(string_split_regex(lower(text), '\W+'), w -> w <> '')"
@@ -5524,17 +5524,14 @@ def _kmv_set_ops_single_task(bi: DataFrame) -> DataFrame:
     by the unchanged oracle + a twin test."""
     from flink_essentials_spark.functions.approx import KMV_SPACE
 
-    def work(batches):
+    def work(pdf):
         import hashlib
 
         import pandas as pd
 
         by_g: dict = {}
-        for pdf in batches:
-            for g, b in zip(pdf["source"], pdf["b"]):
-                by_g.setdefault(g, set()).add(b)
-        if not by_g:
-            return
+        for g, b in zip(pdf["source"], pdf["b"]):
+            by_g.setdefault(g, set()).add(b)
         hsets = {
             g: {
                 int(
@@ -5579,7 +5576,7 @@ def _kmv_set_ops_single_task(bi: DataFrame) -> DataFrame:
                         float(xm) / float(xu),
                     )
                 )
-        yield pd.DataFrame(
+        return pd.DataFrame(
             rows,
             columns=[
                 "source_a",
@@ -5595,7 +5592,8 @@ def _kmv_set_ops_single_task(bi: DataFrame) -> DataFrame:
             ],
         )
 
-    return bi.coalesce(1).mapInPandas(
+    return single_task_map(
+        bi,
         work,
         "source_a string, source_b string, n_sk long, m long,"
         " est_union double, est_jaccard double, est_intersection double,"
@@ -9888,7 +9886,7 @@ def _bleu_pairs_single_task(docs: DataFrame) -> DataFrame:
     exact-binary Decimal. Pinned equal to the relational path by test
     and the unchanged oracle."""
 
-    def work(batches):
+    def work(pdf):
         import hashlib
         import math
         import re as _re
@@ -9906,17 +9904,11 @@ def _bleu_pairs_single_task(docs: DataFrame) -> DataFrame:
                 )
             )
 
-        ids, toks = [], []
-        srcs = set()
-        for pdf in batches:
-            for i, tx, sc in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                ids.append(int(i))
-                toks.append([w for w in tok.split(tx.lower()) if w])
-                if sc is not None:
-                    srcs.add(sc)
-        S = len(srcs)
+        ids = [int(i) for i in pdf["doc_id"]]
+        toks = [
+            [w for w in tok.split(tx.lower()) if w] for tx in pdf["text"]
+        ]
+        S = len({sc for sc in pdf["source"] if sc is not None})
         by_id = dict(zip(ids, toks))
         pairs = [
             (i, i + S)
@@ -9956,23 +9948,23 @@ def _bleu_pairs_single_task(docs: DataFrame) -> DataFrame:
             rows.append(
                 (c, r, c_len, r_len, m1, t1, m2, t2, rnd6(bleu))
             )
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "ref_id",
-                    "c_len",
-                    "r_len",
-                    "m1",
-                    "t1",
-                    "m2",
-                    "t2",
-                    "bleu",
-                ],
-            )
+        return pd.DataFrame(
+            rows,
+            columns=[
+                "doc_id",
+                "ref_id",
+                "c_len",
+                "r_len",
+                "m1",
+                "t1",
+                "m2",
+                "t2",
+                "bleu",
+            ],
+        )
 
-    return docs.select("doc_id", "text", "source").coalesce(1).mapInPandas(
+    return single_task_map(
+        docs.select("doc_id", "text", "source"),
         work,
         "doc_id long, ref_id long, c_len long, r_len long, m1 long, "
         "t1 long, m2 long, t2 long, bleu double",
@@ -10159,7 +10151,7 @@ def _chrf_pairs_single_task(docs: DataFrame) -> DataFrame:
     both engines perform on identical operands (pinned by test and
     the unchanged oracle)."""
 
-    def work(batches):
+    def work(pdf):
         import hashlib
         import re as _re
 
@@ -10169,17 +10161,9 @@ def _chrf_pairs_single_task(docs: DataFrame) -> DataFrame:
         # java regex \s == [ \t\n\x0B\f\r] exactly (python \s would
         # also eat unicode whitespace the Spark side keeps)
         ws = _re.compile("[ \t\n\x0b\f\r]+")
-        ids, chs = [], []
-        srcs = set()
-        for pdf in batches:
-            for i, tx, sc in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                ids.append(int(i))
-                chs.append(ws.sub("", tx))
-                if sc is not None:
-                    srcs.add(sc)
-        S = len(srcs)
+        ids = [int(i) for i in pdf["doc_id"]]
+        chs = [ws.sub("", tx) for tx in pdf["text"]]
+        S = len({sc for sc in pdf["source"] if sc is not None})
         by_id = dict(zip(ids, chs))
         pairs = [
             (i, i + S)
@@ -10225,23 +10209,23 @@ def _chrf_pairs_single_task(docs: DataFrame) -> DataFrame:
                     0.0 if m == 0 else (5.0 * p * rec) / (4.0 * p + rec)
                 )
                 rows.append((c, c + S, o, m, th, tr, p, rec, chrf2))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "ref_id",
-                    "o",
-                    "m",
-                    "th",
-                    "tr",
-                    "prec",
-                    "rec",
-                    "chrf2",
-                ],
-            )
+        return pd.DataFrame(
+            rows,
+            columns=[
+                "doc_id",
+                "ref_id",
+                "o",
+                "m",
+                "th",
+                "tr",
+                "prec",
+                "rec",
+                "chrf2",
+            ],
+        )
 
-    return docs.select("doc_id", "text", "source").coalesce(1).mapInPandas(
+    return single_task_map(
+        docs.select("doc_id", "text", "source"),
         work,
         "doc_id long, ref_id long, o long, m long, th long, tr long, "
         "prec double, rec double, chrf2 double",
@@ -10464,18 +10448,16 @@ def _mondrian_cells_ladder(cells: DataFrame, k: int, rounds: int) -> DataFrame:
     result is row-for-row identical to the row-level rounds (pinned by
     test and by the unchanged unrolled-CTE oracle)."""
 
-    def ladder(batches):
+    def ladder(pdf):
         import pandas as pd
 
-        cl: list[tuple[int, int, int]] = []
-        for pdf in batches:
-            cl.extend(
-                zip(
-                    (int(v) for v in pdf["d1"]),
-                    (int(v) for v in pdf["d2"]),
-                    (int(v) for v in pdf["c"]),
-                )
+        cl: list[tuple[int, int, int]] = list(
+            zip(
+                (int(v) for v in pdf["d1"]),
+                (int(v) for v in pdf["d2"]),
+                (int(v) for v in pdf["c"]),
             )
+        )
         regions = [0] * len(cl)
         for _ in range(rounds):
             by_r: dict[int, list[int]] = {}
@@ -10518,12 +10500,13 @@ def _mondrian_cells_ladder(cells: DataFrame, k: int, rounds: int) -> DataFrame:
                 a[2] = max(a[2], d1)
                 a[3] = min(a[3], d2)
                 a[4] = max(a[4], d2)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             [(r, v[0], v[1], v[2], v[3], v[4]) for r, v in agg.items()],
             columns=["region", "n", "d1_lo", "d1_hi", "d2_lo", "d2_hi"],
         )
 
-    return cells.coalesce(1).mapInPandas(
+    return single_task_map(
+        cells,
         ladder,
         "region long, n long, d1_lo long, d1_hi long, "
         "d2_lo long, d2_hi long",
@@ -11159,20 +11142,12 @@ def _peak_concurrency_single_task(ev: DataFrame) -> DataFrame:
     as one numpy pass (exact integers end to end). Pinned equal by
     test; the banded two-phase ECDF member is the above-bound shape."""
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        ks, ts = [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ks.append(pdf["event_type"].to_numpy())
-            ts.append(pdf["t"].to_numpy(np.int64))
-        if not ks:
-            return
-        k = np.concatenate(ks)
-        t = np.concatenate(ts)
+        k = pdf["event_type"].to_numpy()
+        t = pdf["t"].to_numpy(np.int64)
         uk, kc = np.unique(k, return_inverse=True)
         rows = []
         for ki in range(len(uk)):
@@ -11192,12 +11167,13 @@ def _peak_concurrency_single_task(ev: DataFrame) -> DataFrame:
             peak = int(act.max())
             first = int(uv[np.argmax(act)])  # argmax = first maximum
             rows.append((uk[ki], len(tt), peak, first))
-        yield pd.DataFrame(
+        return pd.DataFrame(
             rows,
             columns=["event_type", "n_events", "peak", "first_peak_ms"],
         )
 
-    return ev.coalesce(1).mapInPandas(
+    return single_task_map(
+        ev,
         work,
         "event_type string, n_events long, peak long, first_peak_ms long",
     )
@@ -14138,22 +14114,13 @@ def _slope_one_devs_single_task(tp: DataFrame) -> DataFrame:
     integers; float64 weight sums stay < 2^53), then replay the
     (−|dev_num|, supp_a, supp_b) global rank and keep rk ≤ 20."""
 
-    def work(batches):
+    def work(pdf):
         import numpy as np
         import pandas as pd
 
-        cs, ss, rs = [], [], []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cs.append(pdf["cust"].to_numpy(np.int64))
-            ss.append(pdf["supp"].to_numpy(np.int64))
-            rs.append(pdf["cnt"].to_numpy(np.int64))
-        if not cs:
-            return
-        cust = np.concatenate(cs)
-        supp = np.concatenate(ss)
-        r = np.concatenate(rs)
+        cust = pdf["cust"].to_numpy(np.int64)
+        supp = pdf["supp"].to_numpy(np.int64)
+        r = pdf["cnt"].to_numpy(np.int64)
         order = np.lexsort((supp, cust))
         cust, supp, r = cust[order], supp[order], r[order]
         uniq_s, sidx = np.unique(supp, return_inverse=True)
@@ -14186,13 +14153,13 @@ def _slope_one_devs_single_task(tp: DataFrame) -> DataFrame:
             )
         nz = np.flatnonzero(n_co)
         if not len(nz):
-            return
+            return None
         a = uniq_s[nz // S]
         b = uniq_s[nz % S]
         co = n_co[nz]
         dn = dev[nz].astype(np.int64)  # exact: |sums| < 2^53
         top = np.lexsort((b, a, -np.abs(dn)))[:20]
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "supp_a": a[top],
                 "supp_b": b[top],
@@ -14204,14 +14171,11 @@ def _slope_one_devs_single_task(tp: DataFrame) -> DataFrame:
             }
         )
 
-    return (
-        tp.select("cust", "supp", "cnt")
-        .coalesce(1)
-        .mapInPandas(
-            work,
-            "supp_a long, supp_b long, n_co long, dev_num long,"
-            " dev double, rk long",
-        )
+    return single_task_map(
+        tp.select("cust", "supp", "cnt"),
+        work,
+        "supp_a long, supp_b long, n_co long, dev_num long,"
+        " dev double, rk long",
     )
 
 

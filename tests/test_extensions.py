@@ -3772,7 +3772,8 @@ def test_banded_rank_equals_row_number(spark):
     band count, on longs (negatives, heavy ties, nulls, int64
     extremes), doubles (nulls, NaN, infinities, signed zeros), a
     zero-span key, an all-null key, a key smaller than the band count,
-    and the global (keys=[]) form — banding granularity must never
+    a null key (its own group, as in row_number), and the global
+    (keys=[]) form — banding granularity must never
     change a rank, and Spark's ascending order puts nulls first and NaN
     last. The single-task twin must agree on the same inputs."""
     from pyspark.sql import Window as W
@@ -3792,6 +3793,7 @@ def test_banded_rank_equals_row_number(spark):
     rows += [("c", 0, 1), ("c", 1, 0)]  # tiny key
     rows += [("d", 0, None), ("d", 1, None)]  # no non-null value
     rows += [("e", 0, lo), ("e", 1, hi)]  # span above int64
+    rows += [(None, 0, 3), (None, 1, None), (None, 2, -7), (None, 3, 3)]
     df = spark.createDataFrame(rows, "k string, id long, v long")
     dfd = df.select("k", "id", (F.col("v") / 7.0).alias("v")).union(
         spark.createDataFrame(

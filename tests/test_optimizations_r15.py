@@ -44,6 +44,38 @@ def test_single_task_ok_unit(monkeypatch):
     assert routing.single_task_ok(10, 100)
 
 
+def test_single_task_map_one_call_over_every_batch(spark):
+    """single_task_map calls its kernel exactly once, on one frame that
+    holds every row of 4 input partitions split into many small Arrow
+    batches; an empty input never calls it, and a kernel returning None
+    or an empty frame yields no rows."""
+    import pandas as pd
+
+    from flink_essentials_spark.routing import single_task_map
+
+    df = spark.range(0, 100, numPartitions=4).select(F.col("id").alias("v"))
+    assert df.rdd.getNumPartitions() == 4
+
+    def summary(pdf):
+        return pd.DataFrame({"n": [len(pdf)], "s": [int(pdf["v"].sum())]})
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert _rows(single_task_map(df, summary, "n long, s long")) == [
+            (100, 4950)
+        ]
+        # summary answers one row even for zero rows, so no row here
+        # means it was never called
+        empty = df.filter("v < 0")
+        assert not _rows(single_task_map(empty, summary, "n long, s long"))
+        assert not _rows(single_task_map(df, lambda p: None, "v long"))
+        assert not _rows(single_task_map(df, lambda p: p.iloc[:0], "v long"))
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_force_distributed_identical_results(spark, monkeypatch):
     """End-to-end: a twin-gated query must produce IDENTICAL rows with
     the override on and off (on = distributed ladder, off = single-task
@@ -310,7 +342,10 @@ def test_grouped_topk_rejects_undirected_order_and_k_above_limit(spark):
 def test_ecdf_cums_single_task_equals_ladder(spark):
     """The one-task ECDF twin must reproduce the banded ladder's full
     column set exactly: per-(key, value) ca/cb, inclusive cumulative
-    counts, key totals, bands and band offsets."""
+    counts, key totals, bands and band offsets — a null key included,
+    as its own group."""
+    import collections
+
     from flink_essentials_spark.functions import timeseries as ts
     from flink_essentials_spark.queries.util import cents
     from flink_essentials_spark.tables import load_tables
@@ -320,18 +355,23 @@ def test_ecdf_cums_single_task_equals_ladder(spark):
         (F.col("user_id") % 2 == 0).alias("is_a"),
         cents("value").alias("v"),
     )
+    ev = ev.union(
+        spark.createDataFrame(
+            [(None, True, 5), (None, False, 5), (None, True, -3)], ev.schema
+        )
+    )
     cols = [
         "__k", "__v", "__ca", "__cb", "__lo", "__hi", "__na", "__nb",
         "__band", "__oa", "__ob", "__cuma", "__cumb",
     ]
-    fast = _rows(
-        ts._ecdf_cums_single_task(ev, "event_type", "is_a", "v", 64)
-        .select(*cols)
-    )
-    slow = _rows(
-        ts._ecdf_cums(ev, "event_type", "is_a", "v", 64).select(*cols)
-    )
+
+    def rows(df):  # a null key does not sort against strings
+        return collections.Counter(map(tuple, df.select(*cols).collect()))
+
+    fast = rows(ts._ecdf_cums_single_task(ev, "event_type", "is_a", "v", 64))
+    slow = rows(ts._ecdf_cums(ev, "event_type", "is_a", "v", 64))
     assert fast == slow and len(fast) > 0
+    assert sum(n for r, n in fast.items() if r[0] is None) == 2
 
 
 def test_exact_quantiles_single_task_equals_ladder(spark):
