@@ -336,9 +336,10 @@ def _streaming_interval_join_sink(
         ms("signup_ts").alias("signup_ts_ms"),
     )
     name = "soj_" + uuid.uuid4().hex[:8]
-    return run_to_memory(spark, out, name, output_mode="append").filter(
-        F.col("user_id") >= 0
-    )
+    # the second sentinel batch evicts and emits every pending row
+    return run_to_memory(
+        spark, out, name, output_mode="append", no_data_batches=False
+    ).filter(F.col("user_id") >= 0)
 
 
 Q_STREAMING_OUTER_JOIN_SQL = """
@@ -437,24 +438,12 @@ def q_streaming_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "sjr_" + uuid.uuid4().hex[:8]
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    # no timers in this pipeline: join eviction and window emission
-    # both happen on watermark enforcement during DATA batches (the
-    # second sentinel exists precisely to be that batch), so the
-    # engine's extra no-data micro-batches after each watermark
-    # advance are pure overhead (the capped_sessions precedent;
-    # results verified identical either way by the oracle)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        return run_to_memory(spark, rolled, name, output_mode="append").filter(
-            F.col("user_id") >= 0
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
+    # join eviction and window emission both happen on watermark
+    # enforcement during DATA batches (the second sentinel is that
+    # batch): no-data batches are pure overhead
+    return run_to_memory(
+        spark, rolled, name, output_mode="append", no_data_batches=False
+    ).filter(F.col("user_id") >= 0)
 
 
 Q_STREAMING_JOIN_ROLLUP_SQL = """
@@ -633,9 +622,10 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "ssw_" + uuid.uuid4().hex[:8]
-    return run_to_memory(spark, win, name, output_mode="append").filter(
-        F.col("user_id") >= 0
-    )
+    # the second sentinel batch emits every real session
+    return run_to_memory(
+        spark, win, name, output_mode="append", no_data_batches=False
+    ).filter(F.col("user_id") >= 0)
 
 
 def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,23 +703,13 @@ def q_streaming_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
     )
     name = "scs_" + uuid.uuid4().hex[:8]
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
     # every timer this design needs fires during a DATA batch (the
-    # second sentinel exists precisely to be that batch), so the
-    # engine's extra timer-service batches after each watermark
-    # advance are pure overhead here — measured 5.4 s → 4.8 s off,
-    # result verified identical either way
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        return run_to_memory(spark, out, name, output_mode="append").filter(
-            F.col("key") >= 0
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
+    # second sentinel is that batch), so the engine's extra
+    # timer-service batches are pure overhead here — measured
+    # 5.4 s → 4.8 s off, result verified identical either way
+    return run_to_memory(
+        spark, out, name, output_mode="append", no_data_batches=False
+    ).filter(F.col("key") >= 0)
 
 
 def q_streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

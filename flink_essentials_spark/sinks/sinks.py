@@ -8,8 +8,8 @@
 - print (K5) → console sink; executeAndCollect (K6) → memory sink
 - addSink(fn) (K4) → foreachBatch
 
-Every streaming query starts here, which sets two things for it alone
-(``start()`` snapshots the session's conf into the query):
+Every streaming query starts here, which sets up to three things for it
+alone (``start()`` snapshots the session's conf into the query):
 
 - State partitions sized to its per-batch volume: a stateful
   operator's partition count is fixed at the first batch, and each
@@ -36,6 +36,22 @@ Every streaming query starts here, which sets two things for it alone
   files they write are the same, so a checkpoint restarts under either.
   Other schemes (HDFS, S3) keep the default, whose atomic rename
   matters there; a manager set on the session is kept.
+- No input-free micro-batches, where the caller says they emit nothing
+  (``no_data_batches=False``): after each watermark advance Spark runs
+  one more batch with no input, to evict state and emit what the new
+  watermark closes, and each pays planning plus a state commit. A
+  time-ordered replay that ends in two sentinel batches has all of that
+  done by the second sentinel, a data batch.
+
+A start also strips the per-key sources from the SparkContext's Hadoop
+conf (``session.strip_conf_sources``): each micro-batch broadcasts ~26
+copies of it, and GZIP-compressing every key's source list is most of
+what a copy costs to serialize. The strip comes after the HDFS and
+mapred classes have registered their default resources, because a
+registration reloads every conf and records the sources again (the
+``session`` module docstring). The start reads ``fs.defaultFS`` off the
+session's SQL conf, else off that Hadoop conf, rather than build a
+whole ``newHadoopConf()`` copy for one key.
 """
 
 from __future__ import annotations
@@ -47,11 +63,13 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_essentials_spark.session import strip_conf_sources
 from flink_essentials_spark.sources.streaming import stream_partitions
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 _SESSION_CHECKPOINT = "spark.sql.streaming.checkpointLocation"
 _FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 _FS_MANAGER = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 _MAX_FOOTERS = 64  # the oldest files: the file source replays in mtime order
 
@@ -116,12 +134,21 @@ def _checkpoint_manager(paths, default_fs: str) -> str | None:
     return _FS_MANAGER if local else None
 
 
-def _start(writer, sdf: DataFrame, checkpoint: str | None = None, output: str | None = None):
-    """``writer.start()`` with ``sdf``'s state partitions and checkpoint
-    manager chosen (module docstring) for this query only."""
+def _start(
+    writer,
+    sdf: DataFrame,
+    checkpoint: str | None = None,
+    output: str | None = None,
+    *,
+    no_data_batches: bool = True,
+):
+    """``writer.start()`` with ``sdf``'s state partitions, checkpoint
+    manager and no-data batches chosen (module docstring) for this query
+    only."""
     spark = sdf.sparkSession
+    strip_conf_sources(spark)
     conf = spark.conf
-    chosen = {}
+    chosen = {} if no_data_batches else {_NO_DATA_BATCHES: "false"}
     rows = _batch_rows(sdf)
     if rows is not None:
         chosen[_SHUFFLE_PARTITIONS] = str(stream_partitions(rows, int(conf.get(_SHUFFLE_PARTITIONS))))
@@ -131,7 +158,8 @@ def _start(writer, sdf: DataFrame, checkpoint: str | None = None, output: str | 
         paths = [checkpoint or conf.get(_SESSION_CHECKPOINT, None) or ""]
         if output:
             paths.append(output)
-        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+        # newHadoopConf's precedence: the session's key over the context's
+        default_fs = conf.get("fs.defaultFS", None) or spark._jsc.hadoopConfiguration().get("fs.defaultFS")
         manager = _checkpoint_manager(paths, default_fs)
         if manager:
             chosen[_FILE_MANAGER] = manager
@@ -162,33 +190,41 @@ def to_memory(
     *,
     output_mode: str = "append",
     checkpoint: str | None = None,
+    no_data_batches: bool = True,
 ):
     """executeAndCollect analog: results land in table ``name``."""
     w = sdf.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    return _start(w, sdf, checkpoint)
+    return _start(w, sdf, checkpoint, no_data_batches=no_data_batches)
 
 
 def run_to_memory(
-    spark: SparkSession, sdf: DataFrame, name: str, *, output_mode: str = "append"
+    spark: SparkSession,
+    sdf: DataFrame,
+    name: str,
+    *,
+    output_mode: str = "append",
+    no_data_batches: bool = True,
 ) -> DataFrame:
     """Drive a streaming frame to completion synchronously (bounded
     sources / file replay) and return the materialized result table.
 
     State partitions are sized from the replay's per-batch volume
-    (module docstring). The checkpoint (offsets/commit logs +
-    state-store deltas, fsynced every micro-batch) goes on fast scratch
-    storage and is removed as soon as the query stops — a bounded
-    replay never resumes, so the checkpoint's only job is to exist
-    while the query runs (guide §6; FES_SCRATCH_DIR overrides the
+    (module docstring); ``no_data_batches=False`` skips Spark's
+    input-free micro-batches, for a replay whose last data batch
+    already evicts and emits everything. The checkpoint (offsets/commit
+    logs + state-store deltas, fsynced every micro-batch) goes on fast
+    scratch storage and is removed as soon as the query stops — a
+    bounded replay never resumes, so the checkpoint's only job is to
+    exist while the query runs (guide §6; FES_SCRATCH_DIR overrides the
     root)."""
     import shutil
 
     from flink_essentials_spark.scratch import scratch_dir
 
     ckpt = scratch_dir("fes_ckpt_")
-    q = to_memory(sdf, name, output_mode=output_mode, checkpoint=ckpt)
+    q = to_memory(sdf, name, output_mode=output_mode, checkpoint=ckpt, no_data_batches=no_data_batches)
     try:
         q.processAllAvailable()
         q.stop()

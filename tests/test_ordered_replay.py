@@ -52,6 +52,7 @@ def _bucket_sizes(sf_dir: str, capped: bool) -> tuple[int, int]:
 # row -> (file_replay sources, sentinel rows per file)
 REPLAY_ROWS = {
     "streaming_outer_join": (2, 2),
+    "streaming_full_outer_join": (2, 2),
     "streaming_join_rollup": (2, 2),
     "streaming_session_windows": (1, 1),
     "streaming_capped_sessions": (1, 1),
@@ -62,13 +63,18 @@ REPLAY_ROWS = {
 def test_replay_reads_two_buckets_then_two_sentinels(spark, recorder, name):
     """The batches that read input are the two range buckets in time
     order, then the two sentinel files; every source reads each file
-    once (the join rows' sentinel file holds one row per side)."""
+    once (the join rows' sentinel file holds one row per side). No
+    input-free batch follows (``run_to_memory(no_data_batches=False)``),
+    and the session's own setting is left as it was."""
     sources, sentinel_rows = REPLAY_ROWS[name]
     ALL_QUERIES[name].fn(spark, SF_DIR).collect()
     b0, b1 = _bucket_sizes(SF_DIR, capped=name == "streaming_capped_sessions")
     assert b0 > 0 and b1 > 0
     expected = [sources * b0, sources * b1] + [sources * sentinel_rows] * 2
     assert _input_batches(recorder, 4) == expected
+    time.sleep(1)  # room for a late fifth batch's progress event
+    assert len(recorder.batches()) == 4
+    assert spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "true"
 
 
 # every row that takes the events ts bounds: the replay rows and the
